@@ -1276,112 +1276,137 @@ object Dedup {
       case _ => ()
     }
 
-  /** Benchmark decontamination: flag training documents sharing at least
-    * `minShared` distinct word n-gram shingles with ANY document of the
-    * held-out slice (`evalSource`). The LLM-corpus shape: the eval set is
-    * benchmark-sized, so its distinct shingle set is BROADCAST (train-side
-    * postings are filtered map-side — the corpus never shuffles against the
-    * eval set); the only shuffle is the per-doc count aggregation, keyed on
-    * doc_id. Shingles are WordGramHashes (distinct per doc by
-    * construction), so n_shared counts distinct shared shingles.
+  /** A decontamination threshold on `n_shared`, the number of a doc's
+    * distinct shingles found in the eval set. [[MinShared]] is an absolute
+    * count ("does this doc quote the benchmark", q57). [[MinSharedPpm]] is
+    * a fraction of the doc's OWN `n_grams` distinct shingles, in integer
+    * ppm so the compare is exact cross-engine. The fraction rule is the
+    * one that survives eval-set growth: background overlap scales with
+    * |eval|, so any fixed count eventually flags everything (the q244
+    * fixture chain kept 217/217 at sf0.01 and 2/1323 at sf0.1 under count
+    * >= 9, while the planted leaks sit at fraction 0.9+ against a
+    * background p99 ~ 0.52). Under either rule a doc sharing nothing is
+    * clean.
     */
-  def decontaminate(docs: DataFrame, evalSource: String,
-                    shingleSize: Int, minShared: Long): DataFrame = {
-    val sh = graft.functions.WordGramHashes.wordGramHashes(col("text"), shingleSize)
-    val evalSh = docs.filter(col("source") === evalSource)
-      .select(explode(sh).as("h")).distinct()
-    docs.filter(col("source") =!= evalSource)
-      .select(col("doc_id"), explode(sh).as("h"))
-      .join(broadcast(evalSh), Seq("h"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+  sealed trait DecontamRule {
+    private[operators] def holds(nShared: Column, nGrams: Column): Column
+  }
+  final case class MinShared(n: Long) extends DecontamRule {
+    private[operators] def holds(nShared: Column, nGrams: Column): Column =
+      nShared >= n
+  }
+  final case class MinSharedPpm(ppm: Long) extends DecontamRule {
+    private[operators] def holds(nShared: Column, nGrams: Column): Column =
+      nShared * lit(1000000L) >= lit(ppm) * nGrams
   }
 
-  /** [[decontaminate]] with a FRACTION threshold instead of an absolute
-    * count: a doc is contaminated when >= `minSharedPpm` (ppm) of ITS OWN
-    * distinct shingles appear in the eval set. The absolute-count rule is
-    * right for "does this doc quote the benchmark" (q57); the fraction
-    * rule is the one that survives eval-set GROWTH — the eval union's
-    * background overlap with ordinary text scales with |eval|, so any
-    * fixed count eventually flags everything (measured: the q244 fixture
-    * chain kept 217/217 at sf0.01 and 2/1323 at sf0.1 under count >= 9,
-    * while the true planted leaks sit at fraction 0.9+ against a
-    * background p99 ~ 0.52). Same broadcast shape and shingle kernel;
-    * threshold in integer ppm so the comparison is exact cross-engine
-    * (n_shared * 1e6 >= ppm * n_grams — no float division).
+  /** Eval sets of at most this many distinct shingle hashes take
+    * [[decontaminate]]'s literal route: the measured crossover of
+    * docs/perf/STREAM_THROUGHPUT_r18.txt and _r19.txt.
     */
-  def decontaminateFraction(docs: DataFrame, evalSource: String,
-                            shingleSize: Int, minSharedPpm: Long): DataFrame = {
-    val sh = graft.functions.WordGramHashes.wordGramHashes(col("text"), shingleSize)
-    val evalSh = docs.filter(col("source") === evalSource)
-      .select(explode(sh).as("h")).distinct()
-    docs.filter(col("source") =!= evalSource)
-      .select(col("doc_id"), size(sh).cast("long").as("n_grams"),
-        explode(sh).as("h"))
-      .join(broadcast(evalSh), Seq("h"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared"), first("n_grams").as("n_grams"))
-      .filter(col("n_shared") * lit(1000000L) >=
-        lit(minSharedPpm) * col("n_grams"))
-  }
+  final val DecontamLiteralCap = 65536
 
-  /** [[decontaminate]] with a Bloom pre-screen — the 100 TB shape when the
-    * eval shingle set itself is broadcast-heavy: the corpus posting
-    * explode first filters through a fixed-size Bloom filter (Spark's own
-    * BloomFilterAggregate/BloomFilterMightContain, the runtime-filter
-    * kernels, surfaced here as first-class operators), and only the
-    * survivors reach the exact shingle join. Bloom false POSITIVES are
-    * removed by that exact join; false negatives are impossible — so the
-    * output is IDENTICAL to [[decontaminate]] (q95 ships under q57's
-    * oracle), while the pre-screen prunes the shuffle/join volume by
-    * roughly the corpus's true-negative rate at a few MB of broadcast.
+  private final case class DecontamSizing(literalCap: Int, bloomBits: Long)
+  // 2^23 Bloom bits = 1 MiB: fpp well under 1 % at 1 M eval hashes
+  private val decontamSizing = new scala.util.DynamicVariable(
+    DecontamSizing(DecontamLiteralCap, 1L << 23))
+
+  /** Runs `body` with [[decontaminate]]'s route sizing overridden: q95
+    * forces the Bloom route (gated under q57's oracle), and the specs and
+    * tools.StreamThroughputProbe pin either route. The route is picked
+    * when the frame is BUILT, so the override must wrap the build.
+    */
+  private[graft] def withDecontamSizing[T](literalCap: Int,
+      bloomBits: Long = decontamSizing.value.bloomBits)(body: => T): T =
+    decontamSizing.withValue(DecontamSizing(literalCap, bloomBits))(body)
+
+  /** Benchmark decontamination. Every row of `docs` (a bigint `doc_id` and
+    * a string `text`, batch or streaming) gains `n_shared`, how many of its
+    * distinct word `shingleSize`-gram hashes (WordGramHashes, distinct per
+    * doc by construction) occur in `evalTexts`' `text`; `n_grams`, its own
+    * distinct count; and the `contaminated` verdict under `rule`.
     *
-    * `numBits` sizes the filter (default 2^23 bits = 1 MiB): fpp ~
-    * (1 - e^(-kn/m))^k; at 1 M eval shingles and 8.4 M bits that is well
-    * under 1 % — and fpp only costs pre-screen efficiency, never
-    * correctness.
+    * The physical route is picked from the MEASURED eval size, by one
+    * `limit(cap + 1)` collect of the distinct eval hashes:
+    *  - at most [[DecontamLiteralCap]] hashes: the sorted array is one plan
+    *    constant and each row counts its intersection with the
+    *    SortedIntersectCount merge walk. Map-only, zero shuffle; the eval
+    *    side is consumed at build time.
+    *  - above it, an eval-scaled constant would ship with every task, so
+    *    the eval hash frame is materialised once (localCheckpoint) and the
+    *    docs go through [[bloomRoute]].
     */
-  /** Serialized Bloom sketch of a LONG column — built distributed
-    * (treeAggregate), lands on the driver as a numBits/8-byte array: the
-    * bounded-matrix contract (k-means centroids pattern), embedded as the
-    * constant BloomFilterMightContain requires. Same serialized format as
-    * BloomFilterAggregate's. Shared by [[decontaminateBloom]] and the
-    * streaming decontamination screen (WebIngest.decontamBloomFold) so
-    * the sizing rule and the bridge construction live once.
-    */
-  private[graft] def bloomBytesOf(df: DataFrame, colName: String,
-                                  numBits: Long): Array[Byte] = {
-    val bf = df.stat.bloomFilter(colName, math.max(1L, numBits / 16), numBits)
-    val baos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(baos)
-    baos.toByteArray
+  def decontaminate(docs: DataFrame, evalTexts: DataFrame, shingleSize: Int,
+                    rule: DecontamRule): DataFrame = {
+    val sizing = decontamSizing.value
+    def hashes(text: Column): Column = coalesce(
+      graft.functions.WordGramHashes.wordGramHashes(text, shingleSize),
+      typedLit(Array.empty[Long]))
+    val evalSh = evalTexts.select(explode(hashes(col("text"))).as("h"))
+      .distinct()
+    val probe = evalSh.limit(sizing.literalCap + 1).collect().map(_.getLong(0))
+    val counted =
+      if (probe.length <= sizing.literalCap) {
+        java.util.Arrays.sort(probe)
+        docs.withColumn("__sh", hashes(col("text")))
+          .withColumn("n_shared", graft.functions.SortedIntersectCount
+            .sortedIntersectCount(col("__sh"), lit(probe)).cast("long"))
+          .withColumn("n_grams", size(col("__sh")).cast("long"))
+          .drop("__sh")
+      } else bloomRoute(docs, evalSh.localCheckpoint(),
+        hashes(col("text")), sizing.bloomBits)
+    counted.withColumn("contaminated",
+      col("n_shared") > 0 && rule.holds(col("n_shared"), col("n_grams")))
   }
 
-  /** The probe side of [[bloomBytesOf]]: might_contain(sketch, v). */
-  private[graft] def bloomMightContain(bloomBytes: Array[Byte],
-                                       v: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        org.apache.spark.sql.catalyst.expressions.Literal(bloomBytes),
-        GraftColumnBridge.expression(v)))
-  }
-
-  def decontaminateBloom(docs: DataFrame, evalSource: String,
-                         shingleSize: Int, minShared: Long,
-                         numBits: Long = 1L << 23): DataFrame = {
-    val sh = graft.functions.WordGramHashes.wordGramHashes(col("text"), shingleSize)
-    val evalSh = docs.filter(col("source") === evalSource)
-      .select(explode(sh).as("h")).distinct()
-    val bytes = bloomBytesOf(evalSh, "h", numBits)
-    docs.filter(col("source") =!= evalSource)
-      .select(col("doc_id"), explode(sh).as("h"))
-      .filter(bloomMightContain(bytes, col("h")))
-      .join(broadcast(evalSh), Seq("h")) // exact verify: kills false positives
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+  /** [[decontaminate]]'s large-eval route; returns docs' columns plus
+    * `n_shared` and `n_grams`. The only plan constant is a `numBits` Bloom
+    * sketch of `evalSh` (Spark's runtime-filter kernels). It prunes each
+    * doc's hash array before the explode, so a clean doc joins one NULL
+    * row instead of one row per shingle; the survivors meet `evalSh` in an
+    * exact equi-join (shuffle_hash, never broadcast), which removes the
+    * Bloom false positives (false negatives are impossible, so both routes
+    * decide identically). A per-doc fold re-assembles each row:
+    * flatMapGroups on a batch, flatMapGroupsWithState(Append, NoTimeout)
+    * on a stream, exact there because a doc's rows co-arrive in the
+    * micro-batch that exploded them (each doc_id must arrive once).
+    */
+  private def bloomRoute(docs: DataFrame, evalSh: DataFrame,
+                         sh: Column, numBits: Long): DataFrame = {
+    import org.apache.spark.sql.{Encoders, GraftColumnBridge, Row}
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val sketch = new java.io.ByteArrayOutputStream()
+    evalSh.stat.bloomFilter("h", math.max(1L, numBits / 16), numBits).writeTo(sketch)
+    def mightContain(h: Column): Column = GraftColumnBridge.column(
+      BloomFilterMightContain(Literal(sketch.toByteArray), GraftColumnBridge.expression(h)))
+    val docCols = docs.columns.toSeq.map(col)
+    val nDoc = docCols.size
+    val rows = docs
+      .select(docCols ++ Seq(size(sh).cast("long").as("n_grams"),
+        explode_outer(filter(sh, mightContain(_))).as("__h")): _*)
+      .join(evalSh.select(col("h").as("__eh")).hint("shuffle_hash"),
+        col("__h") === col("__eh"), "left")
+      .select(docCols ++ Seq(col("n_grams"), col("__eh").isNotNull.as("__m")): _*)
+    def fold(it: Iterator[Row]): Iterator[Row] = {
+      var first: Row = null
+      var nShared = 0L
+      it.foreach { r =>
+        if (first == null) first = r
+        if (r.getBoolean(nDoc + 1)) nShared += 1
+      }
+      Iterator.single(Row.fromSeq(
+        first.toSeq.take(nDoc) ++ Seq(nShared, first.getLong(nDoc))))
+    }
+    val out = Encoders.row(docs.schema
+      .add("n_shared", "bigint", nullable = false)
+      .add("n_grams", "bigint", nullable = false))
+    val byDoc = rows.groupByKey((r: Row) => r.getAs[Long]("doc_id"))(Encoders.scalaLong)
+    if (rows.isStreaming)
+      byDoc.flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+        (_: Long, it: Iterator[Row], _: GroupState[Boolean]) => fold(it))(
+        Encoders.scalaBoolean, out)
+    else byDoc.flatMapGroups((_: Long, it: Iterator[Row]) => fold(it))(out)
   }
 
   /** 4x16-bit band explode of a simhash fingerprint frame — the candidate
@@ -2539,8 +2564,8 @@ object Dedup {
     * n_hit (grams present in the corpus index), and contam_ppm
     * (n_hit/n_grams in integer parts-per-million — engine-exact, no float
     * ratio). This is [[decontaminate]]'s posture pointed the other way:
-    * decontamination screens the corpus against a small eval set
-    * (broadcast), this screens an arriving batch against the WHOLE corpus
+    * decontamination screens the corpus against an eval set (a plan
+    * constant when small), this screens an arriving batch against the WHOLE corpus
     * (bucketed index join — the index is corpus-sized and must never
     * broadcast). The admission rule a curation pipeline derives from it
     * (reject contam_ppm above a threshold) composes with the

@@ -109,12 +109,12 @@ object Curation2 {
     *   (TextIndex.docNllFromStats, q243 — per-source tertiles, tail
     *   dropped) → near-dup resolve + keep-first (jaccardPairs +
     *   contractedComponents, q24/q58) → decontaminate vs the held-out
-    *   eval source (Dedup.decontaminateFraction — src0 is the benchmark;
-    *   its docs leave the pool and its post-extraction trigrams are the
-    *   screen. FRACTION rule at 0.6 of the doc's own grams, because an
-    *   absolute count cannot survive eval-set growth: background overlap
-    *   p99 measured 0.17 at sf0.01 vs 0.52 at sf0.1 while true planted
-    *   leaks sit at 0.9+) →
+    *   eval source (Dedup.decontaminate — src0 is the benchmark; its
+    *   docs leave the pool and its post-extraction trigrams are the
+    *   screen, routed by their measured count. FRACTION rule at 0.6 of
+    *   the doc's own grams, because an absolute count cannot survive
+    *   eval-set growth: background overlap p99 measured 0.17 at sf0.01
+    *   vs 0.52 at sf0.1 while true planted leaks sit at 0.9+) →
     *   NEAR-DUP-SAFE split on the resolved cluster label (q239's device —
     *   leakage impossible by construction) → per-(split, lang) token
     *   budget + 512-token sequence packing through chunkedPrefix (q165's
@@ -190,10 +190,9 @@ object Curation2 {
     val surv = kept.join(labels, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("component"), col("doc_id")))
       .filter(col("doc_id") === col("cluster")) // keep-first == label
-    val contaminated = Dedup.decontaminateFraction(
-      surv.select("doc_id", "source", "text")
-        .unionByName(evalDocs.select("doc_id", "source", "text")),
-      evalSource = "src0", shingleSize = 3, minSharedPpm = 600000L)
+    val contaminated = Dedup.decontaminate(surv.select("doc_id", "text"),
+        evalDocs, shingleSize = 3, Dedup.MinSharedPpm(600000L))
+      .filter(col("contaminated"))
     val clean = surv
       .join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
       .withColumn("split", Sampling.splitAssign(col("cluster")))

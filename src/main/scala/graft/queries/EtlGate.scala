@@ -338,7 +338,7 @@ object EtlGate {
   * The whitespace-preserving writer options matter: Spark's CSV writer
   * trims by default, which would silently unplant the trim fixtures.
   */
-private[queries] object EtlCsvFixture {
+private[graft] object EtlCsvFixture {
 
   def ensure(s: SparkSession, dir: String): String = synchronized {
     val tag = java.security.MessageDigest.getInstance("MD5")

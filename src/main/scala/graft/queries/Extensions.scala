@@ -508,28 +508,36 @@ object Extensions {
 
   /** Benchmark decontamination under the gate (operators.Dedup
     * .decontaminate): training docs sharing >= 3 distinct word 3-gram
-    * shingles with the held-out 'src0' slice. The eval shingle set is
-    * broadcast; the corpus never shuffles against it.
+    * shingles with the held-out 'src0' slice. The eval slice is far under
+    * the literal cap at every SF, so the route is map-only: the corpus
+    * never shuffles.
     */
   def q57Decontam(s: SparkSession, dir: String): DataFrame =
-    Dedup.decontaminate(Tables.documents(s, dir), evalSource = "src0",
-      shingleSize = 3, minShared = 3L)
+    decontamVsSrc0(Tables.documents(s, dir), Dedup.MinShared(3L))
+      .select("doc_id", "n_shared")
 
-  /** q246: q57's FRACTION-rule twin (Dedup.decontaminateFraction, born in
-    * q244's chain and gated first-class here): a training doc is
-    * contaminated when >= 60% of ITS OWN distinct trigrams appear in the
-    * held-out 'src0' slice — the rule that survives eval-set growth where
-    * any absolute count eventually flags everything (the operator's
-    * scaladoc carries the measured divergence). Integer-ppm compare, no
-    * float division; same broadcast shape as q57. Output carries both
-    * sides of the ratio so a triage owner sees WHY a doc was flagged.
-    * Live at every SF on the fixture (5/2/76 docs flagged, the
-    * near-copy tail at fraction 1.0).
+  /** q246: q57's FRACTION-rule twin (born in q244's chain and gated
+    * first-class here): a training doc is contaminated when >= 60% of ITS
+    * OWN distinct trigrams appear in the held-out 'src0' slice — the rule
+    * that survives eval-set growth where any absolute count eventually
+    * flags everything (Dedup.DecontamRule carries the measured
+    * divergence). Output carries both sides of the ratio so a triage
+    * owner sees WHY a doc was flagged. Live at every SF on the fixture
+    * (5/2/76 docs flagged, the near-copy tail at fraction 1.0).
     */
   def q246DecontamFraction(s: SparkSession, dir: String): DataFrame =
-    Dedup.decontaminateFraction(
-      Tables.documents(s, dir).filter(col("text").isNotNull),
-      evalSource = "src0", shingleSize = 3, minSharedPpm = 600000L)
+    decontamVsSrc0(Tables.documents(s, dir).filter(col("text").isNotNull),
+      Dedup.MinSharedPpm(600000L))
+      .select("doc_id", "n_shared", "n_grams")
+
+  /** The contaminated training docs of `docs`: 'src0' is the held-out
+    * eval slice, every other source is training text.
+    */
+  private[queries] def decontamVsSrc0(docs: DataFrame,
+                                      rule: Dedup.DecontamRule): DataFrame =
+    Dedup.decontaminate(docs.filter(col("source") =!= "src0"),
+        docs.filter(col("source") === "src0"), shingleSize = 3, rule)
+      .filter(col("contaminated"))
 
   /** Dedup resolution under the gate: connected components over q24's
     * exact near-dup pairs — each involved doc labeled with its cluster's

@@ -387,15 +387,15 @@ object Scaled {
            dsum(col("o_totalprice"), 2).as("sum_price"))
   }
 
-  /** q57's benchmark decontamination through the Bloom pre-screen
-    * (operators.Dedup.decontaminateBloom): a fixed-MB filter prunes the
-    * corpus posting explode before the exact shingle join removes the
-    * filter's false positives — output identical to q57 by construction,
-    * declared under q57's own oracle.
+  /** q57 forced onto Dedup.decontaminate's large-eval route: a fixed-MB
+    * Bloom filter prunes the corpus posting explode, an exact shuffle_hash
+    * join removes its false positives, and a per-doc fold counts — output
+    * identical to q57's literal route by construction, declared under
+    * q57's own oracle. The fixture's eval slice is far under the literal
+    * cap, so the cap is overridden to 0 to keep the route gated.
     */
   def q95DecontamBloom(s: SparkSession, dir: String): DataFrame =
-    Dedup.decontaminateBloom(Tables.documents(s, dir), evalSource = "src0",
-      shingleSize = 3, minShared = 3L)
+    Dedup.withDecontamSizing(literalCap = 0)(Extensions.q57Decontam(s, dir))
 
   /** q67's incremental admission through the aggregation-free
     * stream-compatible shape (operators.Dedup.admitStream): static band

@@ -19,11 +19,9 @@ import graft.operators.{Dedup, Expectations, TextIndex}
   *   flatMapGroupsWithState — the documented custom-state mechanism,
   *   exact here because a page's pair rows co-arrive in the micro-batch
   *   that exploded them, so no state ever carries across batches) →
-  *   DECONTAMINATION vs a held-out eval set (q246's fraction rule,
-  *   PER-ROW: the eval shingle set is eval-sized — the same side batch
-  *   decontaminateFraction broadcasts — embedded as one sorted-array
-  *   constant and intersected by the codegen merge walk; a corpus-scale
-  *   eval set swaps in the Bloom prescreen posture instead) →
+  *   DECONTAMINATION vs a held-out eval set (q246's fraction rule through
+  *   Dedup.decontaminate, the batch operator itself; its route is picked
+  *   from the eval set's measured size, and both routes are append-legal) →
   *   NEAR-DUP-SAFE split assignment against the frozen corpus index
   *   (Dedup.splitStreamMinhash — the q239 twin: an arrival inherits its
   *   matched cluster's split, so a crawl result whose near-duplicate is
@@ -58,26 +56,11 @@ object WebIngest {
   /** Decontamination stage config: `evalTexts` holds the held-out
     * benchmark documents (col `text`); a page is rejected when >=
     * `minSharedPpm` (ppm) of its own distinct `shingleSize`-gram hashes
-    * appear in the eval set — Dedup.decontaminateFraction's rule.
-    *
-    * TWO physical shapes, picked by eval-set size (round-16 verdict
-    * watch #1 — the literal was a per-task plan-constant scale-killer
-    * for corpus-scale eval sets): at most `maxLiteralShingles` distinct
-    * eval hashes evaluate PER ROW against one sorted-array plan
-    * constant (map-only, zero shuffle — right for benchmark-suite eval
-    * sets); above it, the screen routes through
-    * Dedup.decontaminateBloom's posture — a fixed-`bloomNumBits` Bloom
-    * prescreen (plan constant whose size never grows with the eval
-    * set) pruning the shingle explode, then an EXACT stream-static
-    * equi-join against the eval hash frame (shuffle_hash, never
-    * broadcast) and a per-doc fold. Bloom false positives die in the
-    * exact join, false negatives are impossible — both shapes decide
-    * identically (WebIngestSpec pins them equal on a planted corpus).
+    * appear in the eval set — Dedup.decontaminate under the
+    * Dedup.MinSharedPpm rule, which picks its route from the eval size.
     */
   final case class Decontam(evalTexts: DataFrame, shingleSize: Int = 3,
-                            minSharedPpm: Long = 600000L,
-                            maxLiteralShingles: Long = 65536L,
-                            bloomNumBits: Long = 1L << 23)
+                            minSharedPpm: Long = 600000L)
 
   def ingest(pages: DataFrame, index: Dedup.MinhashSplitIndex,
              rules: Seq[Expectations.Expect],
@@ -128,57 +111,13 @@ object WebIngest {
           Some(rejected(scored.filter(bad), "reject_quality")))
     }
 
-    // decontamination stage: fraction rule per row against the eval
-    // set's sorted hash array (eval-sized — the broadcast side of batch
-    // decontaminateFraction, here a plan constant; the merge-walk kernel
-    // counts the intersection)
     val (cleanPass, contamReject) = decontam match {
       case None => (qualityPass, None)
       case Some(d) =>
-        // the eval side is STATIC even under a streaming ingest, so it is
-        // persisted up front: the cardinality count (shape decision), the
-        // Bloom build, and the stream-static join side all read the same
-        // computed frame instead of re-running the explode+distinct — on
-        // a stream the join side is re-read EVERY micro-batch, so an
-        // uncached eval corpus would re-shuffle per batch indefinitely
-        // (round-17 review). Lifetime by route: the literal shape
-        // consumes the frame at BUILD time only (count + collect) and
-        // releases it immediately; the batch Bloom shape releases with
-        // the other staged frames; a STREAMING Bloom shape keeps it
-        // cached for the stream's lifetime — that cache IS the static
-        // join side's intended steady state (callers stopping the stream
-        // in a shared session reclaim it with a cache clear).
-        val evalSh = d.evalTexts
-          .select(explode(graft.functions.WordGramHashes
-            .wordGramHashes(col("text"), d.shingleSize)).as("h"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // shape decision: small sets take the zero-shuffle literal, big
-        // sets the fixed-size Bloom + exact join (the decontaminateBloom
-        // posture; never a plan literal that grows with the eval corpus)
-        val marked = stage(
-          if (evalSh.count() <= d.maxLiteralShingles) {
-            val evalArr: Array[Long] =
-              evalSh.orderBy("h").collect().map(_.getLong(0))
-            evalSh.unpersist(blocking = false) // fully consumed at build
-            val sh = graft.functions.WordGramHashes
-              .wordGramHashes(col("text"), d.shingleSize)
-            qualityPass
-              .withColumn("__sh", sh)
-              .withColumn("__n_grams", size(col("__sh")).cast("long"))
-              .withColumn("__n_shared", graft.functions.SortedIntersectCount
-                .sortedIntersectCount(col("__sh"), lit(evalArr)).cast("long"))
-              .withColumn("__contam",
-                col("__n_grams") > 0 &&
-                  col("__n_shared") * lit(1000000L) >=
-                    lit(d.minSharedPpm) * col("__n_grams"))
-          } else {
-            if (!pages.isStreaming) staged += evalSh
-            decontamBloomFold(qualityPass, evalSh, d.shingleSize,
-              d.minSharedPpm, d.bloomNumBits)
-          })
-        (marked.filter(!col("__contam")).select("doc_id", "text"),
-          Some(rejected(marked.filter(col("__contam")), "reject_contaminated")))
+        val marked = stage(Dedup.decontaminate(qualityPass, d.evalTexts,
+          d.shingleSize, Dedup.MinSharedPpm(d.minSharedPpm)))
+        (marked.filter(!col("contaminated")).select("doc_id", "text"),
+          Some(rejected(marked.filter(col("contaminated")), "reject_contaminated")))
     }
 
     val ok = Dedup.splitStreamMinhash(cleanPass, index, threshold,
@@ -268,65 +207,5 @@ object WebIngest {
         (key: Long, it: Iterator[(Long, String, Boolean, Option[Long])]) =>
           fold(key, it))
     folded.toDF("doc_id", "text", "avg_nll_u")
-  }
-
-  /** The LARGE-eval decontamination screen (Decontam's second shape):
-    * fixed-size Bloom prescreen + exact stream-static equi-join + per-doc
-    * fold. Returns (doc_id, text, __contam) — the same verdict column the
-    * literal shape computes, by the same integer-ppm rule.
-    *
-    * Scale shape: the only plan constant is the `numBits`-sized Bloom
-    * sketch (independent of eval cardinality); the shingle explode is
-    * pruned by it BEFORE the join (inside the array, so a fully-clean
-    * page joins one NULL row instead of |shingles| rows), the eval frame
-    * joins shuffle_hash (never broadcast), and the per-doc count folds
-    * through the docNllFold device — flatMapGroups on a batch,
-    * flatMapGroupsWithState(Append, NoTimeout) on a stream, exact under
-    * the same single-arrival precondition because a page's shingle rows
-    * co-arrive in the micro-batch that exploded them.
-    */
-  private[streaming] def decontamBloomFold(docs: DataFrame, evalSh: DataFrame,
-                                           shingleSize: Int, minSharedPpm: Long,
-                                           numBits: Long): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val bloomBytes = Dedup.bloomBytesOf(evalSh, "h", numBits)
-    val sh = graft.functions.WordGramHashes
-      .wordGramHashes(col("text"), shingleSize)
-    val ev = evalSh.select(col("h").as("__eh"), lit(true).as("__m"))
-    val rows = docs
-      .select(col("doc_id"), col("text"),
-        coalesce(size(sh), lit(0)).cast("long").as("__n"),
-        explode_outer(filter(sh, h => Dedup.bloomMightContain(bloomBytes, h)))
-          .as("__h"))
-      .join(ev.hint("shuffle_hash"), col("__h") === col("__eh"), "left")
-      .select(col("doc_id"), col("text"), col("__n"),
-        coalesce(col("__m"), lit(false)).as("__m"))
-      .as[(Long, String, Long, Boolean)]
-    def fold(key: Long, it: Iterator[(Long, String, Long, Boolean)])
-        : Iterator[(Long, String, Boolean)] = {
-      var text: String = null
-      var nGrams = 0L
-      var nShared = 0L
-      it.foreach { case (_, t, n, m) =>
-        text = t
-        nGrams = n
-        if (m) nShared += 1
-      }
-      Iterator.single((key, text,
-        nGrams > 0 && nShared * 1000000L >= minSharedPpm * nGrams))
-    }
-    val folded =
-      if (rows.isStreaming)
-        rows.groupByKey(_._1).flatMapGroupsWithState(
-          org.apache.spark.sql.streaming.OutputMode.Append(),
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-          (key: Long, it: Iterator[(Long, String, Long, Boolean)],
-           _: org.apache.spark.sql.streaming.GroupState[Boolean]) =>
-            fold(key, it))
-      else rows.groupByKey(_._1).flatMapGroups(
-        (key: Long, it: Iterator[(Long, String, Long, Boolean)]) =>
-          fold(key, it))
-    folded.toDF("doc_id", "text", "__contam")
   }
 }

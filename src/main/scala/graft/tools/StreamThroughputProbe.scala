@@ -3,19 +3,21 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev harness (round-17 verdict ask #7): MEASURE the web-ingest
-  * decontamination routes instead of assuming the route threshold.
+/** Dev harness: MEASURE the decontamination routes instead of assuming
+  * the route threshold.
   *
-  * WebIngest.Decontam picks between two physical shapes by eval-set
-  * size: at most `maxLiteralShingles` distinct eval hashes run the
-  * zero-shuffle sorted-array literal per row; above it the fixed-size
-  * Bloom prescreen + exact stream-static join. The default threshold
-  * (65536) was an engineering judgment — this probe times BOTH routes
-  * on the SAME corpus at several eval-set sizes, batch and MemoryStream
-  * micro-batch, and reports rows/sec so the crossover is a number.
+  * Dedup.decontaminate picks between two physical shapes by eval-set
+  * size: at most Dedup.DecontamLiteralCap (65536) distinct eval hashes
+  * run the zero-shuffle sorted-array literal per row; above it the
+  * fixed-size Bloom prescreen + exact join + per-doc fold. This probe
+  * pins each route with the cap override and times BOTH on the SAME
+  * corpus at several eval-set sizes, through WebIngest.ingest as a batch
+  * (the same operator body batch queries such as q244 call) and as
+  * MemoryStream micro-batches, and reports rows/sec so the crossover is
+  * a number.
   *
-  * Usage: runMain graft.tools.StreamThroughputProbe [sfDir] [replicas]
-  * Writes docs/perf/STREAM_THROUGHPUT_r18.txt.
+  * Usage: runMain graft.tools.StreamThroughputProbe [sfDir] [replicas] [out]
+  * Writes `out` (default docs/perf/STREAM_THROUGHPUT_r19.txt).
   */
 object StreamThroughputProbe {
   private def page(text: String): String =
@@ -24,6 +26,8 @@ object StreamThroughputProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val replicas = if (args.length > 1) args(1).toInt else 20
+    val outPath = if (args.length > 2) args(2)
+      else "docs/perf/STREAM_THROUGHPUT_r19.txt"
     val spark = graft.GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -68,23 +72,30 @@ object StreamThroughputProbe {
     def log(s: String): Unit = { println(s); sb.append(s).append('\n') }
     log(s"[stp] sf=$sfDir docs=$nDocs pages=$nPages replicas=$replicas")
 
-    def wallOf(d: Option[graft.streaming.WebIngest.Decontam]): Double = {
+    // the cap override pins a route; the literal pin sits far above the
+    // largest eval tier
+    val literalRoute = 1 << 24
+    val bloomRoute = 0
+    def wallOf(d: Option[graft.streaming.WebIngest.Decontam],
+               cap: Int = literalRoute): Double = {
       spark.sharedState.cacheManager.clearCache()
       pages.persist(); pages.count() // keep arrivals cached, outside the wall
       val t0 = System.nanoTime()
-      graft.streaming.WebIngest.ingest(pages, idx, rules, threshold = 0.5,
-        decontam = d).write.format("noop").mode("overwrite").save()
+      graft.operators.Dedup.withDecontamSizing(cap)(
+        graft.streaming.WebIngest.ingest(pages, idx, rules, threshold = 0.5,
+          decontam = d)).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
-    def streamWallOf(d: graft.streaming.WebIngest.Decontam,
+    def streamWallOf(d: graft.streaming.WebIngest.Decontam, cap: Int,
                      batches: Int): Double = {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx = spark.sqlContext
       val rows = pages.collect().map(r => (r.getLong(0), r.getString(1)))
       val input = MemoryStream[(Long, String)]
-      val q = graft.streaming.WebIngest.ingest(
-          input.toDF().toDF("doc_id", "html"), idx, rules, threshold = 0.5,
-          decontam = Some(d))
+      val q = graft.operators.Dedup.withDecontamSizing(cap)(
+          graft.streaming.WebIngest.ingest(
+            input.toDF().toDF("doc_id", "html"), idx, rules, threshold = 0.5,
+            decontam = Some(d)))
         .writeStream.outputMode("append")
         .format("memory").queryName("stp_stream").start()
       try {
@@ -111,27 +122,24 @@ object StreamThroughputProbe {
       val eval = evalOf(take, reps)
       val nSh = eval.select(explode(graft.functions.WordGramHashes
         .wordGramHashes(col("text"), 3)).as("h")).distinct().count()
-      def decontam(maxLit: Long) = graft.streaming.WebIngest.Decontam(
-        eval, shingleSize = 3, minSharedPpm = 600000L,
-        maxLiteralShingles = maxLit)
-      val lit_ = wallOf(Some(decontam(Long.MaxValue))) // force literal
-      val blm = wallOf(Some(decontam(0L)))             // force Bloom
+      val decontam = graft.streaming.WebIngest.Decontam(
+        eval, shingleSize = 3, minSharedPpm = 600000L)
+      val lit_ = wallOf(Some(decontam), literalRoute)
+      val blm = wallOf(Some(decontam), bloomRoute)
       log(f"[stp] eval=$tag shingles=$nSh literal: $lit_%.2f s " +
         f"(${nPages / lit_}%.0f rows/s)  bloom: $blm%.2f s " +
         f"(${nPages / blm}%.0f rows/s)  literal/bloom=${lit_ / blm}%.2f")
     }
 
     // streaming micro-batch posture at the mid eval tier, both routes
-    val evalMid = evalOf(500, 1)
-    val sLit = streamWallOf(graft.streaming.WebIngest.Decontam(evalMid,
-      maxLiteralShingles = Long.MaxValue), batches = 8)
-    val sBlm = streamWallOf(graft.streaming.WebIngest.Decontam(evalMid,
-      maxLiteralShingles = 0L), batches = 8)
+    val evalMid = graft.streaming.WebIngest.Decontam(evalOf(500, 1))
+    val sLit = streamWallOf(evalMid, literalRoute, batches = 8)
+    val sBlm = streamWallOf(evalMid, bloomRoute, batches = 8)
     log(f"[stp] stream(8 micro-batches) literal: $sLit%.2f s " +
       f"(${nPages / sLit}%.0f rows/s)  bloom: $sBlm%.2f s " +
       f"(${nPages / sBlm}%.0f rows/s)")
 
-    val out = java.nio.file.Paths.get("docs/perf/STREAM_THROUGHPUT_r18.txt")
+    val out = java.nio.file.Paths.get(outPath)
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.writeString(out, sb.toString)
     log(s"[stp] wrote $out")

@@ -6,10 +6,14 @@ import org.apache.spark.sql.functions._
 
 class DashboardSpec extends SparkSpecBase {
 
-  lazy val result: Pipeline.Result = Pipeline.run(spark, Pipeline.Config(
-    evPath = s"$RefData/Ev_Population.csv",
-    electricityPath = s"$RefData/Electricity_Consumption.csv",
-    pollutionPath = s"$RefData/Pollution_Index.csv"))
+  // the ETL gate's reference-shaped CSV trio, generated from sf0.001
+  lazy val result: Pipeline.Result = {
+    val fx = graft.queries.EtlCsvFixture.ensure(spark, Sf0001)
+    Pipeline.run(spark, Pipeline.Config(
+      evPath = s"$fx/ev",
+      electricityPath = s"$fx/electricity",
+      pollutionPath = s"$fx/pollution.csv"))
+  }
 
   lazy val dash: Dashboard =
     Dashboard(result.dims.suburb, result.evImpactFact, result.energyPollutionFact)
@@ -47,7 +51,10 @@ class DashboardSpec extends SparkSpecBase {
   }
 
   test("suburb drilldown returns both years for a pollution-covered suburb") {
-    val rows = dash.suburbDrilldown("Alexandria").collect()
+    val covered = dash.energyPollutionWithSuburb
+      .filter(col("NO2_LEVEL").isNotNull)
+      .agg(min("SUBURB_NAME")).collect()(0).getString(0)
+    val rows = dash.suburbDrilldown(covered).collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(2022, 2023))
   }
 

@@ -309,7 +309,9 @@ class DedupSpec extends SparkSpecBase {
       (2L, "a b c d e zz", "en", "src1"),  // shares 3 -> contaminated
       (3L, "a b c x y z", "en", "src1"),   // shares 1 -> clean at minShared=3
       (4L, "p q r s t u", "en", "src1")))  // shares 0
-    val out = Dedup.decontaminate(docs, "src0", shingleSize = 3, minShared = 3L)
+    val out = Dedup.decontaminate(docs.filter($"source" =!= "src0"),
+        docs.filter($"source" === "src0"), shingleSize = 3, Dedup.MinShared(3L))
+      .filter($"contaminated").select("doc_id", "n_shared")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((2L, 3L)))
   }
@@ -860,18 +862,90 @@ class DedupSpec extends SparkSpecBase {
     assert(found * 10 >= exact.size * 8, s"recall $found/${exact.size}")
   }
 
-  test("decontaminateBloom equals the exact path even under heavy fpp pressure") {
+  /** Every (doc_id -> n_shared, n_grams, contaminated) row of a result. */
+  private def verdicts(df: org.apache.spark.sql.DataFrame) =
+    df.select("doc_id", "n_shared", "n_grams", "contaminated").collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
+      .toMap
+
+  /** The largest array literal in `df`'s analyzed plan. */
+  private def maxArrayLiteral(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.ArrayType
+    var mx = 0
+    df.queryExecution.analyzed.foreach(_.expressions.foreach(_.foreach {
+      case l: Literal if l.dataType.isInstanceOf[ArrayType] && l.value != null =>
+        mx = math.max(mx, l.value.asInstanceOf[ArrayData].numElements())
+      case _ => ()
+    }))
+    mx
+  }
+
+  test("decontaminate: both routes x both rules x batch and stream agree") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, Sf0001)
-    val exact = Dedup.decontaminate(docs, "src0", 3, 3L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // default sizing AND a deliberately tiny 512-bit filter: false
-    // positives flood the pre-screen, the exact join must still kill them
-    for (bits <- Seq(1L << 23, 512L)) {
-      val bloom = Dedup.decontaminateBloom(docs, "src0", 3, 3L, numBits = bits)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(bloom == exact, s"numBits=$bits")
+    val train = docs.filter($"source" =!= "src0").select("doc_id", "text")
+    val eval = docs.filter($"source" === "src0")
+    val trainRows = train.collect().map(r => (r.getLong(0), r.getString(1)))
+    // literal, Bloom at the default size, and a deliberately tiny 512-bit
+    // Bloom filter: false positives flood the prescreen, the exact join
+    // must still kill them
+    val routes = Seq(("literal", Dedup.DecontamLiteralCap, 1L << 23),
+      ("bloom", 0, 1L << 23), ("bloom512", 0, 512L))
+    for ((rule, ri) <- Seq(Dedup.MinShared(3L), Dedup.MinSharedPpm(600000L))
+                         .zipWithIndex) {
+      val expect = verdicts(Dedup.decontaminate(train, eval, 3, rule))
+      assert(expect.size == trainRows.length)
+      assert(expect.values.exists(_._3), s"$rule flags nothing on the fixture")
+      for ((route, cap, bits) <- routes) {
+        def pinned(in: org.apache.spark.sql.DataFrame) =
+          Dedup.withDecontamSizing(cap, bits)(Dedup.decontaminate(in, eval, 3, rule))
+        val batch = pinned(train)
+        assert(verdicts(batch) == expect, s"$route batch, $rule")
+        if (route != "literal") {
+          // plan hygiene: no array literal that scales with the eval set
+          // (the fixed-size Bloom BINARY constant is the only big one)
+          assert(maxArrayLiteral(batch) <= 8,
+            s"eval-scaled array literal leaked into the $route plan")
+          assert(batch.queryExecution.analyzed.toString.contains("might_contain"),
+            s"Bloom prescreen missing from the $route plan")
+        }
+        val input = MemoryStream[(Long, String)]
+        val name = s"decontam_${route}_$ri"
+        val q = pinned(input.toDF().toDF("doc_id", "text"))
+          .writeStream.outputMode("append")
+          .format("memory").queryName(name).start()
+        try {
+          val (a, b) = trainRows.splitAt(trainRows.length / 2)
+          input.addData(a.toSeq); q.processAllAvailable()
+          input.addData(b.toSeq); q.processAllAvailable()
+          assert(verdicts(spark.table(name)) == expect, s"$route stream, $rule")
+        } finally q.stop()
+      }
     }
-    assert(exact.nonEmpty)
+  }
+
+  test("decontaminate routes by the eval size: cap hashes literal, cap + 1 Bloom") {
+    // n tokens make n - 2 distinct trigram hashes
+    def evalOf(nHashes: Int) =
+      Seq((0 until nHashes + 2).map(i => s"t$i").mkString(" ")).toDF("text")
+    val train = Seq(
+      (1L, "t0 t1 t2 t3 t4"),    // 3 grams, all in the eval set
+      (2L, "t0 t1 t2 x y z"),    // 1 of 4 grams shared
+      (3L, "p q r s")).toDF("doc_id", "text")
+    val cap = Dedup.DecontamLiteralCap
+    val atCap = Dedup.decontaminate(train, evalOf(cap), 3, Dedup.MinShared(2L))
+    val overCap = Dedup.decontaminate(train, evalOf(cap + 1), 3, Dedup.MinShared(2L))
+    assert(maxArrayLiteral(atCap) == cap, "cap hashes must take the literal route")
+    assert(!atCap.queryExecution.analyzed.toString.contains("might_contain"))
+    assert(maxArrayLiteral(overCap) <= 8, "cap + 1 hashes must take the Bloom route")
+    assert(overCap.queryExecution.analyzed.toString.contains("might_contain"))
+    val expect = Map(1L -> ((3L, 3L, true)), 2L -> ((1L, 4L, false)),
+      3L -> ((0L, 2L, false)))
+    assert(verdicts(atCap) == expect)
+    assert(verdicts(overCap) == expect)
   }
 
   test("admitStream equals admitIncremental on batch AND on a real stream") {

@@ -184,7 +184,7 @@ class Curation2Spec extends SparkSpecBase {
   }
 
 
-  test("decontaminateFraction: near-copy of an eval doc flagged, background overlap not") {
+  test("decontaminate ppm: near-copy of an eval doc flagged, background not") {
     import spark.implicits._
     import graft.operators.Dedup
     val evalText = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -194,9 +194,10 @@ class Curation2Spec extends SparkSpecBase {
       (3L, "srcX", "alpha beta unrelated words everywhere else entirely fresh text here"), // shares 1 gram
       (4L, "srcX", "totally different vocabulary nothing shared at all with eval")
     ).toDF("doc_id", "source", "text")
-    val flagged = Dedup.decontaminateFraction(docs, "src0",
-        shingleSize = 3, minSharedPpm = 600000L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val flagged = Dedup.decontaminate(docs.filter($"source" =!= "src0"),
+        docs.filter($"source" === "src0"), shingleSize = 3,
+        Dedup.MinSharedPpm(600000L))
+      .filter($"contaminated").select("doc_id").collect().map(_.getLong(0)).toSet
     assert(flagged == Set(2L), s"expected only the near-copy, got $flagged")
   }
 

@@ -4,6 +4,11 @@ import graft.SparkSpecBase
 
 class CsvSourceSpec extends SparkSpecBase {
 
+  // the ETL gate's reference-shaped CSV trio, generated from the sf0.001
+  // fixture: `;` EV listings, a BOM'd electricity file, and a pollution
+  // file with its header on line 3
+  private lazy val fx = graft.queries.EtlCsvFixture.ensure(spark, Sf0001)
+
   test("SnakeUpper normalization repairs the reference's drifted EV headers") {
     import HeaderMode.SnakeUpper
     assert(CsvSource.normalize("VEHICLE TYPE", SnakeUpper) == "VEHICLE_TYPE")
@@ -15,20 +20,22 @@ class CsvSourceSpec extends SparkSpecBase {
   }
 
   test("EV csv reads with normalized headers and all rows") {
-    val df = CsvSource(s"$RefData/Ev_Population.csv", sep = ";",
+    val df = CsvSource(s"$fx/ev", sep = ";",
       headerMode = HeaderMode.SnakeUpper).read(spark)
     assert(df.columns.toSet.intersect(
       Set("VEHICLE_TYPE", "FUEL_TYPE", "MODEL", "LISTED_PRICE", "RANGE", "SUBURB"))
       .size == 6)
-    assert(df.count() == 107)
+    // one listing per `part` row
+    assert(df.count() == graft.Tables.part(spark, Sf0001).count())
   }
 
   test("electricity csv strips the UTF-8 BOM from the first header") {
-    val df = CsvSource(s"$RefData/Electricity_Consumption.csv", sep = ";",
+    val df = CsvSource(s"$fx/electricity", sep = ";",
       headerMode = HeaderMode.Trim).read(spark)
     assert(df.columns.head == "FID")
     assert(df.columns.contains("F2021_22"))
-    assert(df.count() == 29)
+    // one row per `nation` row
+    assert(df.count() == graft.Tables.nation(spark, Sf0001).count())
   }
 
   test("quoted fields with embedded separators parse correctly") {
@@ -52,10 +59,10 @@ class CsvSourceSpec extends SparkSpecBase {
   }
 
   test("headerLine=2 skips the junk title lines of the pollution csv") {
-    val df = CsvSource(s"$RefData/Pollution_Index.csv", sep = ",",
+    val df = CsvSource(s"$fx/pollution.csv", sep = ",",
       headerLine = 2, headerMode = HeaderMode.Trim).read(spark)
     assert(df.columns.head == "Date")
-    assert(df.columns.count(_.contains("NO2 annual average")) == 23)
-    assert(df.count() == 2) // the two annual rows
+    assert(df.columns.count(_.contains("NO2 annual average")) == 8)
+    assert(df.count() == 4) // the four dated rows
   }
 }

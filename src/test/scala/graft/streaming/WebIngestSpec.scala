@@ -173,17 +173,15 @@ class WebIngestSpec extends SparkSpecBase {
         ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)),
           r.getSeq[String](4).toList, r.getString(5)))).toMap
 
-    // maxLiteralShingles = 0 forces the Bloom + stream-static-join shape
+    // a literal cap of 0 forces the Bloom + stream-static-join shape; the
+    // routes' equality is DedupSpec's route table
     val big = WebIngest.Decontam(evalDocs, shingleSize = 3,
-      minSharedPpm = 600000L, maxLiteralShingles = 0L)
-    val lit_ = big.copy(maxLiteralShingles = Long.MaxValue)
-    val viaBloomDf = WebIngest.ingest(arrivals, idx, rules, threshold = 0.5,
-      decontam = Some(big))
+      minSharedPpm = 600000L)
+    def viaBloomOf(pages: org.apache.spark.sql.DataFrame) =
+      Dedup.withDecontamSizing(literalCap = 0)(
+        WebIngest.ingest(pages, idx, rules, threshold = 0.5, decontam = Some(big)))
+    val viaBloomDf = viaBloomOf(arrivals)
     val viaBloom = canon(viaBloomDf)
-    val viaLiteral = canon(WebIngest.ingest(arrivals, idx, rules,
-      threshold = 0.5, decontam = Some(lit_)))
-    assert(viaBloom == viaLiteral,
-      "Bloom shape must decide identically to the literal shape")
     assert(viaBloom(99997L)._5 == "reject_contaminated")
     assert(viaBloom.values.exists(_._5 == "admit"))
 
@@ -207,8 +205,7 @@ class WebIngestSpec extends SparkSpecBase {
 
     // stream == batch through the Bloom shape
     val input = MemoryStream[(Long, String)]
-    val q = WebIngest.ingest(input.toDF().toDF("doc_id", "html"),
-        idx, rules, threshold = 0.5, decontam = Some(big))
+    val q = viaBloomOf(input.toDF().toDF("doc_id", "html"))
       .writeStream.outputMode("append")
       .format("memory").queryName("web_ingest_bloom").start()
     try {
@@ -217,13 +214,7 @@ class WebIngestSpec extends SparkSpecBase {
       input.addData(b.toSeq); q.processAllAvailable()
       assert(canon(spark.table("web_ingest_bloom")) == viaBloom,
         "MemoryStream Bloom-shape ingest diverged from the batch run")
-    } finally {
-      q.stop()
-      // the streaming Bloom shape caches the static eval side for the
-      // stream's lifetime (its documented steady state) — reclaim it so
-      // the shared test session's cache-emptiness checks stay meaningful
-      spark.sharedState.cacheManager.clearCache()
-    }
+    } finally q.stop()
   }
 
   test("composed ingest keeps the no-broadcast contract") {
