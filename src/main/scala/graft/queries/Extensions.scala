@@ -533,8 +533,8 @@ object Extensions {
   /** The contaminated training docs of `docs`: 'src0' is the held-out
     * eval slice, every other source is training text.
     */
-  private[queries] def decontamVsSrc0(docs: DataFrame,
-                                      rule: Dedup.DecontamRule): DataFrame =
+  private def decontamVsSrc0(docs: DataFrame,
+                             rule: Dedup.DecontamRule): DataFrame =
     Dedup.decontaminate(docs.filter(col("source") =!= "src0"),
         docs.filter(col("source") === "src0"), shingleSize = 3, rule)
       .filter(col("contaminated"))
