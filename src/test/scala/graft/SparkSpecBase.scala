@@ -12,7 +12,18 @@ trait SparkSpecBase extends AnyFunSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+  /** A checkout of the reference EcoWatt-ETL repository: its input CSVs and
+    * its own star-schema outputs. Not vendored here.
+    */
   val RefData = "/root/reference/data"
+  val RefGolden = "/root/reference/extracted"
+
+  /** True only when both reference directories exist; checks the paths and
+    * opens nothing.
+    */
+  def hasReference: Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefData)) &&
+      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefGolden))
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
 
