@@ -6,6 +6,14 @@ package graft
   * charged to the first query measured.
   */
 object Bench {
+  /** Per-query forensics over the timed runs (warm-ups excluded); each field
+    * is one column of the file artifact, keyed by query.
+    */
+  private final case class QueryCtx(
+      gcMs: Long, heapMb: Long, load1: String, psiCpuUs: Long, psiIoUs: Long,
+      cpuMs: Long, taskCpuMs: Long, wallMs: Long, warmups: Int,
+      jitCold: Boolean, semiCold: Boolean, codegenCompiles: Long)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // same default as GraftSession.get(): bench and verify must run the
@@ -194,6 +202,7 @@ object Bench {
       val semiCold = lastRatioHigh && !continueWarm && lastFalling5
       val (gc0, cpu0, io0) = (gcMs(), psiUs("cpu"), psiUs("io"))
       val (pcpu0, tcpu0) = (PerfMeters.procCpuMs(), taskCpu.cpuNs.get())
+      val cg0 = PerfMeters.codegenCompiles()
       val w0 = System.nanoTime()
       val first = time(name, fn)
       val timed =
@@ -204,10 +213,11 @@ object Bench {
       val wallMs = (System.nanoTime() - w0) / 1000000L
       val cpuMs = if (pcpu0 < 0) -1L else PerfMeters.procCpuMs() - pcpu0
       val taskCpuMs = (taskCpu.cpuNs.get() - tcpu0) / 1000000L
-      val ctx = (gcMs() - gc0, heapMb(), loadavg1(),
+      val ctx = QueryCtx(gcMs() - gc0, heapMb(), loadavg1(),
         if (cpu0 < 0) -1L else psiUs("cpu") - cpu0,
         if (io0 < 0) -1L else psiUs("io") - io0,
-        cpuMs, taskCpuMs, wallMs, warmups, stillCold, semiCold)
+        cpuMs, taskCpuMs, wallMs, warmups, stillCold, semiCold,
+        PerfMeters.codegenCompiles() - cg0)
       (name, if (timed.exists(_ < 0)) -1.0 else timed.min, timed, ctx)
     }
     // cache isolation is owned by measure() itself (its first statement)
@@ -233,7 +243,7 @@ object Bench {
     val retriedFirstRuns = scala.collection.mutable.Map[String, Seq[Double]]()
     val retryLoads = scala.collection.mutable.Map[String, Double]()
     val results = firstPass.map { case r @ (name, _, timed, ctx) =>
-      val hostSignature = spreadOf(timed) > 3.0 && ctx._1 < 1000L
+      val hostSignature = spreadOf(timed) > 3.0 && ctx.gcMs < 1000L
       if (!hostSignature) r
       else {
         var waited = 0
@@ -255,7 +265,7 @@ object Bench {
           r
         } else {
           System.err.println(s"[bench] RETRY $name (spread " +
-            f"${spreadOf(timed)}%.1f, gc ${ctx._1} ms — host signature); " +
+            f"${spreadOf(timed)}%.1f, gc ${ctx.gcMs} ms — host signature); " +
             s"waited ${waited}s for load1 < $retryLoad1")
           val retry = measure(name, selected(name), warmupsMax = 1)
           // the load around the retry, in the artifact — sampled AFTER
@@ -288,53 +298,41 @@ object Bench {
     val runsJson = results.map { case (k, _, timed, _) =>
       "\"" + k + "\":" + timed.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    def byQuery(col: QueryCtx => Any): String =
+      results.map { case (k, _, _, ctx) => "\"" + k + "\":" + col(ctx) }.mkString("{", ",", "}")
     // gc_ms: GC time accrued across the query's 3 timed runs; heap_mb:
     // used heap after the last run; load1: 1-min loadavg at query end.
     // All three are longs/strings rendered locale-independently.
-    val gcJson = results.map { case (k, _, _, (g, _, _, _, _, _, _, _, _, _, _)) =>
-      "\"" + k + "\":" + g
-    }.mkString("{", ",", "}")
-    val heapJson = results.map { case (k, _, _, (_, h, _, _, _, _, _, _, _, _, _)) =>
-      "\"" + k + "\":" + h
-    }.mkString("{", ",", "}")
-    val loadJson = results.map { case (k, _, _, (_, _, l, _, _, _, _, _, _, _, _)) =>
-      "\"" + k + "\":" + l
-    }.mkString("{", ",", "}")
-    val psiCpuJson = results.map { case (k, _, _, (_, _, _, c, _, _, _, _, _, _, _)) =>
-      "\"" + k + "\":" + c
-    }.mkString("{", ",", "}")
-    val psiIoJson = results.map { case (k, _, _, (_, _, _, _, i, _, _, _, _, _, _)) =>
-      "\"" + k + "\":" + i
-    }.mkString("{", ",", "}")
+    val gcJson = byQuery(_.gcMs)
+    val heapJson = byQuery(_.heapMb)
+    val loadJson = byQuery(_.load1)
+    val psiCpuJson = byQuery(_.psiCpuUs)
+    val psiIoJson = byQuery(_.psiIoUs)
     // cpu_ms / task_cpu_ms / wall_ms share gc_ms's 3-timed-run window
     // (warm-ups now EXCLUDED — they absorb compilation, so these columns
     // read clean): cpu_ms >> wall_ms says the runs really burned parallel
     // cycles (plan); cpu_ms << wall_ms says the host starved the JVM;
     // task_cpu_ms << cpu_ms with high wall says driver-side time.
-    val cpuJson = results.map { case (k, _, _, (_, _, _, _, _, c, _, _, _, _, _)) =>
-      "\"" + k + "\":" + c
-    }.mkString("{", ",", "}")
-    val taskCpuJson = results.map { case (k, _, _, (_, _, _, _, _, _, t, _, _, _, _)) =>
-      "\"" + k + "\":" + t
-    }.mkString("{", ",", "}")
-    val wallJson = results.map { case (k, _, _, (_, _, _, _, _, _, _, w, _, _, _)) =>
-      "\"" + k + "\":" + w
-    }.mkString("{", ",", "}")
+    val cpuJson = byQuery(_.cpuMs)
+    val taskCpuJson = byQuery(_.taskCpuMs)
+    val wallJson = byQuery(_.wallMs)
+    // codegen_compiles: generated classes Janino compiled in the same
+    // window. A warm query served from the codegen cache compiles none; a
+    // steady count says its generated source changes per run, or the
+    // cache (GraftSession.CodegenCacheEntries) is smaller than the
+    // working set.
+    val codegenJson = byQuery(_.codegenCompiles)
     // warm-up forensics: how many warm-ups each query took (1 = was warm
     // immediately) and whether it STILL showed the compiling signature
     // after 3 — the in-run replacement for the post-hoc JIT adjudication.
-    val warmupsJson = results.map { case (k, _, _, (_, _, _, _, _, _, _, _, n, _, _)) =>
-      "\"" + k + "\":" + n
-    }.mkString("{", ",", "}")
-    val jitColdJson = results.map { case (k, _, _, (_, _, _, _, _, _, _, _, _, j, _)) =>
-      "\"" + k + "\":" + j
-    }.mkString("{", ",", "}")
+    val warmupsJson = byQuery(_.warmups)
+    val jitColdJson = byQuery(_.jitCold)
     // semi-cold tail (round-16 advice): warm-up loop stopped by the
     // 20%-decline test with the proc/task ratio still high and the CPU
     // still falling >5% — forensic only (single-sample declines in that
     // band are pd-noise-indistinguishable on stable driver-heavy queries).
     val semiColdJson = results.collect {
-      case (k, _, _, (_, _, _, _, _, _, _, _, _, _, sc)) if sc => "\"" + k + "\""
+      case (k, _, _, ctx) if ctx.semiCold => "\"" + k + "\""
     }.mkString("[", ",", "]")
     // Variance honesty (round-10 verdict ask): min-of-3 stays the headline
     // statistic, but a contended or pathological capture must flag ITSELF.
@@ -412,7 +410,7 @@ object Bench {
         s""""gc_ms":$gcJson,"heap_mb":$heapJson,"load1":$loadJson,""" +
         s""""psi_cpu_us":$psiCpuJson,"psi_io_us":$psiIoJson,""" +
         s""""cpu_ms":$cpuJson,"task_cpu_ms":$taskCpuJson,""" +
-        s""""wall_ms":$wallJson,""" +
+        s""""wall_ms":$wallJson,"codegen_compiles":$codegenJson,""" +
         s""""warmups":$warmupsJson,"jit_cold":$jitColdJson,""" +
         s""""semi_cold":$semiColdJson,""" +
         s""""runs_first":$runsFirstJson,""" +

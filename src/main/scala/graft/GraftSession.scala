@@ -17,8 +17,21 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the local core count, not the 200 default —
   *    on a real cluster this is set per-job; at 100 TB you would size it to
   *    ~2-3x total executor cores with AQE coalescing enabled (it is).
+  *  - a generated-class cache of [[CodegenCacheEntries]] entries, not
+  *    Spark's 100. With 100, every warm perfbench round recompiled its
+  *    working set: 272–279 classes per `etl_star` round, 348 per
+  *    `web_curation` round (4 cores). With this default a warm `etl_star`
+  *    round compiles none. Class names leave out the codegen stage id, so a
+  *    pipeline's class does not depend on the order AQE finishes stages in.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`. Static, and the cache is one per
+    * JVM: it must be set on the builder of the first session. 2,000 holds
+    * the largest measured working set, the 408 classes a `web_curation`
+    * set-up compiles, several times over; an entry is one loaded class.
+    */
+  private[graft] val CodegenCacheEntries = 2000
+
   def builder(cores: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
@@ -28,6 +41,12 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // name generated classes without their whole-stage codegen id. AQE
+      // numbers codegen stages in the order its query stages finish, so a
+      // warm Pipeline.run whose branches finished in another order got the
+      // same pipelines under new class names: 8 cache misses in that run.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)

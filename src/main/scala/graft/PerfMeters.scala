@@ -35,6 +35,14 @@ object PerfMeters {
       case _ => -1L
     }
 
+  /** Cumulative count of generated classes Janino has compiled in this JVM
+    * (whole-stage codegen, projections, predicates): each compile is a miss
+    * in Spark's codegen cache. JVM-global, so a delta is meaningful only
+    * while one query runs at a time.
+    */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Accumulates executor task CPU (ns) and run time (ms) across all jobs
     * on the session. Register once; read cumulative counters and diff.
     */

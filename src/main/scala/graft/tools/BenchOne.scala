@@ -18,12 +18,15 @@ object BenchOne {
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'; valid: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
       spark.sharedState.cacheManager.clearCache()
+      // (seconds, generated classes compiled) per run; a warm run served
+      // from the codegen cache compiles none
       val runs = (1 to 4).map { _ =>
-        val t0 = System.nanoTime()
+        val (t0, c0) = (System.nanoTime(), graft.PerfMeters.codegenCompiles())
         fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, graft.PerfMeters.codegenCompiles() - c0)
       }
-      println(f"$name%-28s min=${runs.tail.min}%.3f s  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
+      println(f"$name%-28s min=${runs.tail.map(_._1).min}%.3f s  runs=${runs.map(r => f"${r._1}%.3f").mkString(",")}" +
+        s"  codegen_compiles=${runs.tail.map(_._2).mkString(",")}")
     }
     spark.stop()
   }

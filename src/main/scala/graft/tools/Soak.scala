@@ -4,10 +4,11 @@ package graft.tools
   * per-query protocol (clearCache, then 4 consecutive invocations) N times
   * in one JVM, printing every run plus the two leak candidates the round-10
   * verdict named — active release-listeners and cached-plan count — before
-  * each iteration. A genuine accumulation pathology (listener leak, cache
-  * growth, codegen cache churn) shows as a monotonic trend across
-  * iterations on an idle host; flat times say the bad capture was host
-  * contention.
+  * each iteration, and after it the generated classes compiled, the
+  * driver's loaded/unloaded class counts and its metaspace. A genuine
+  * accumulation pathology (listener leak, cache growth, codegen cache
+  * churn) shows as a monotonic trend across iterations on an idle host;
+  * flat times say the bad capture was host contention.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.Soak <iters> q76_profile_approx [more...]
   */
@@ -44,6 +45,15 @@ object Soak {
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     def heapMb(): Long = java.lang.management.ManagementFactory
       .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
+    // loaded/unloaded driver classes and metaspace in use: every codegen
+    // cache entry is a loaded class, so a cache that grows without bound
+    // shows here as a rising loaded count and metaspace
+    def classMem(): String = {
+      val cl = java.lang.management.ManagementFactory.getClassLoadingMXBean
+      val meta = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .find(_.getName == "Metaspace").map(_.getUsage.getUsed >> 20).getOrElse(-1L)
+      s"classes_loaded=${cl.getLoadedClassCount} classes_unloaded=${cl.getUnloadedClassCount} metaspace_mb=$meta"
+    }
     def psiUs(kind: String): Long =
       try scala.io.Source.fromFile(s"/proc/pressure/$kind").getLines()
         .find(_.startsWith("some")).flatMap(_.split("\\s+")
@@ -54,6 +64,7 @@ object Soak {
     // same cpu-vs-wall column Bench carries since round 13 (verdict ask
     // #3): cpu_ms ~ wall x threads says plan, cpu_ms << wall says host
     val taskCpu = graft.PerfMeters.attachTaskCpu(spark)
+    println(s"[soak] start ${classMem()}")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
@@ -63,6 +74,7 @@ object Soak {
         val pre = s"listeners=${graft.operators.Caching.activeListeners.get} cached=${cachedCount()} load=${loadavg()}"
         val (gc0, cpu0) = (gcMs(), psiUs("cpu"))
         val (pcpu0, tcpu0) = (graft.PerfMeters.procCpuMs(), taskCpu.cpuNs.get())
+        val cg0 = graft.PerfMeters.codegenCompiles()
         val runs = (1 to 4).map { _ =>
           val t0 = System.nanoTime()
           fn(spark, sfDir).count()
@@ -70,12 +82,12 @@ object Soak {
         }
         val cpuMs = if (pcpu0 < 0) -1L else graft.PerfMeters.procCpuMs() - pcpu0
         val tCpuMs = (taskCpu.cpuNs.get() - tcpu0) / 1000000L
-        println(f"[$name iter $i%2d] $pre gc_ms=${gcMs() - gc0} heap_mb=${heapMb()} psi_cpu_us=${if (cpu0 < 0) -1L else psiUs("cpu") - cpu0} cpu_ms=$cpuMs task_cpu_ms=$tCpuMs  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
+        println(f"[$name iter $i%2d] $pre gc_ms=${gcMs() - gc0} heap_mb=${heapMb()} psi_cpu_us=${if (cpu0 < 0) -1L else psiUs("cpu") - cpu0} cpu_ms=$cpuMs task_cpu_ms=$tCpuMs codegen_compiles=${graft.PerfMeters.codegenCompiles() - cg0} ${classMem()}  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
         runs.tail.min
       }
       println(f"[$name] min-of-3 per iter: ${mins.map(m => f"$m%.3f").mkString(",")}  spread=${mins.max / mins.min}%.2fx")
     }
-    println(s"[soak] final listeners=${graft.operators.Caching.activeListeners.get} cached=${cachedCount()}")
+    println(s"[soak] final listeners=${graft.operators.Caching.activeListeners.get} cached=${cachedCount()} ${classMem()}")
     spark.stop()
   }
 }
