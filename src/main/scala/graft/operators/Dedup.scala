@@ -1914,7 +1914,8 @@ object Dedup {
     *  - else SELF: an unmatched arrival is its own cluster of one,
     *    exactly q239's `coalesce(component, doc_id)`.
     *
-    * Output (doc_id, cluster, n_clusters, split) with split =
+    * Output (doc_id, cluster, n_clusters, split, <the input's other
+    * columns but `text`, unchanged>) with split =
     * [[Sampling.splitAssign]](cluster) — identical assignment algebra to
     * the batch path, so stream == batch q239 splits whenever arrivals
     * don't bridge and don't undercut their matched cluster's min id
@@ -1927,8 +1928,8 @@ object Dedup {
                          minBandCollisions: Int = 1,
                          trainPct: Int = 90, valPct: Int = 5): DataFrame = {
     val rows = index.numHashes / index.bands
+    val carried = newDocs.columns.toSeq.filterNot(Set("doc_id", "text"))
     var s = newDocs
-      .select(col("doc_id"), col("text"))
       .withColumn("xh", graft.functions.WordGramHashes
         .wordGramHashes(col("text"), index.shingleSize))
       .withColumn("sig",
@@ -1969,11 +1970,11 @@ object Dedup {
         array_min(transform(col("exact_tier"), c => c.getField("ccl"))),
         array_min(transform(col("near"), c => c.getField("ccl"))),
         col("doc_id")))
-      .select(col("doc_id"), col("cluster"),
+      .select(Seq(col("doc_id"), col("cluster"),
         size(array_distinct(transform(col("near"), c => c.getField("ccl"))))
           .cast("long").as("n_clusters"),
         graft.operators.Sampling.splitAssign(col("cluster"),
-          trainPct, valPct).as("split"))
+          trainPct, valPct).as("split")) ++ carried.map(col): _*)
   }
 
   /** [[splitStreamMinhash]]'s ROLLING lifecycle — the variant that also

@@ -7,30 +7,38 @@ import graft.operators.{Dedup, Expectations, TextIndex}
 
 /** Crawl-shaped streaming ingest (round-14 verdict ask #10, quality +
   * decontamination stages round 16 — verdict ask #5): the front of the
-  * q244 web pipeline as a stream-capable composition —
+  * q244 web pipeline as a stream-capable composition. Every page goes
+  * through ONE row flow, and each stage adds verdict columns instead of
+  * filtering:
   *
   *   raw page → visible text (functions.Html.htmlExtract, map-only) →
-  *   expectation gate (Expectations.gateRows, map-only; violating pages
-  *   route to a self-describing quarantine disposition instead of
-  *   admission — the gateBatch convention at row granularity) →
-  *   PERPLEXITY FILTER vs a frozen reference bigram LM (q243's
+  *   PERPLEXITY SCORE vs a frozen reference bigram LM (q243's
   *   docNllFromStats algebra: the vocab²-bounded probability table is a
   *   STATIC side, the per-doc NLL fold runs through
   *   flatMapGroupsWithState — the documented custom-state mechanism,
   *   exact here because a page's pair rows co-arrive in the micro-batch
-  *   that exploded them, so no state ever carries across batches) →
+  *   that exploded them, so no state ever carries across batches; adds
+  *   `avg_nll_u`) →
+  *   expectation gate (Expectations.gateRows, map-only; adds `violations`
+  *   and `admitted`) →
   *   DECONTAMINATION vs a held-out eval set (q246's fraction rule through
   *   Dedup.decontaminate, the batch operator itself; its route is picked
-  *   from the eval set's measured size, and both routes are append-legal) →
+  *   from the eval set's measured size, and both routes are append-legal;
+  *   adds `contaminated`) →
+  *   one CASE picks the disposition: not admitted → 'quarantine', NLL
+  *   above the ceiling → 'reject_quality', contaminated →
+  *   'reject_contaminated', otherwise 'admit' →
   *   NEAR-DUP-SAFE split assignment against the frozen corpus index
   *   (Dedup.splitStreamMinhash — the q239 twin: an arrival inherits its
   *   matched cluster's split, so a crawl result whose near-duplicate is
-  *   already in train can never land in test).
+  *   already in train can never land in test). Only admitted pages carry
+  *   their text into it.
   *
-  * Every stage is append-mode streaming-legal: map-only projections,
-  * stream-static equi-joins (index and probability sides
-  * shuffle_hash-hinted, never broadcast — an O(corpus) broadcast is the
-  * round-5 scale-killer), and the one per-doc fold via
+  * So each stage runs once per micro-batch, and a batch backfill needs no
+  * persisted intermediate. Every stage is append-mode streaming-legal:
+  * map-only projections, stream-static equi-joins (index and probability
+  * sides shuffle_hash-hinted, never broadcast — an O(corpus) broadcast is
+  * the round-5 scale-killer), and the one per-doc fold via
   * flatMapGroupsWithState(Append, NoTimeout). The SAME function body
   * serves the batch backfill and the readStream ingest — WebIngestSpec
   * pins MemoryStream output equal to the batch run row-for-row across
@@ -38,9 +46,10 @@ import graft.operators.{Dedup, Expectations, TextIndex}
   *
   * Output, one row per page: (doc_id, cluster, n_clusters, split,
   * violations, disposition) — disposition 'admit' rows carry the split
-  * assignment; 'quarantine' rows carry the violated rule names;
-  * 'reject_quality' / 'reject_contaminated' rows carry NULL split, so
-  * nothing partial ever reaches a training shard.
+  * assignment; 'quarantine' rows carry the violated rule names (every
+  * other row an empty list); 'reject_quality' / 'reject_contaminated'
+  * rows carry NULL split, so nothing partial ever reaches a training
+  * shard.
   */
 object WebIngest {
 
@@ -72,69 +81,32 @@ object WebIngest {
              decontam: Option[Decontam] = None): DataFrame = {
     val extracted = pages.select(col("doc_id"),
       graft.functions.Html.htmlExtract(col(htmlCol)).as("text"))
-    // the disposition union re-reads each staged frame once per branch:
-    // on the BATCH path (backfill) that would re-run the whole upstream
-    // chain — the ~EntitySteps.size-step extract per consumer, the NLL
-    // shuffle twice — so multi-consumer stages persist there, released
-    // by the scoped listener on the final frame (the q99 device).
-    // Streaming frames cannot persist; each micro-batch is small by
-    // construction, so the recompute is the stream's (bounded) price.
-    val staged = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def stage(df: DataFrame): DataFrame =
-      if (pages.isStreaming) df
-      else {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        staged += p
-        p
-      }
-    val gated = stage(Expectations.gateRows(extracted, rules))
-    val admitted0 = gated.filter(col("admitted")).select("doc_id", "text")
-
-    def rejected(df: DataFrame, disposition: String): DataFrame =
-      df.select(col("doc_id"),
-        lit(null).cast("bigint").as("cluster"),
-        lit(null).cast("bigint").as("n_clusters"),
-        lit(null).cast("string").as("split"),
-        array().cast("array<string>").as("violations"),
-        lit(disposition).as("disposition"))
-
-    // perplexity stage: per-doc mean NLL vs the frozen LM; the pair rows
-    // a page explodes into co-arrive in its micro-batch, so the stateful
-    // fold is batch-local and exact (state never set)
-    val (qualityPass, qualityReject) = quality match {
-      case None => (admitted0, None)
-      case Some(q) =>
-        val scored = stage(docNllFold(admitted0, q.stats))
-        val bad = col("avg_nll_u").isNotNull &&
-          col("avg_nll_u") > q.maxAvgNllMicro
-        (scored.filter(!bad).select("doc_id", "text"),
-          Some(rejected(scored.filter(bad), "reject_quality")))
-    }
-
-    val (cleanPass, contamReject) = decontam match {
-      case None => (qualityPass, None)
-      case Some(d) =>
-        val marked = stage(Dedup.decontaminate(qualityPass, d.evalTexts,
-          d.shingleSize, Dedup.MinSharedPpm(d.minSharedPpm)))
-        (marked.filter(!col("contaminated")).select("doc_id", "text"),
-          Some(rejected(marked.filter(col("contaminated")), "reject_contaminated")))
-    }
-
-    val ok = Dedup.splitStreamMinhash(cleanPass, index, threshold,
-        minBandCollisions, trainPct, valPct)
-      .withColumn("violations", array().cast("array<string>"))
-      .withColumn("disposition", lit("admit"))
-    val quarantined = gated.filter(!col("admitted"))
-      .select(col("doc_id"),
-        lit(null).cast("bigint").as("cluster"),
-        lit(null).cast("bigint").as("n_clusters"),
-        lit(null).cast("string").as("split"),
-        col("violations"),
-        lit("quarantine").as("disposition"))
-    val out = Seq(qualityReject, contamReject).flatten
-      .foldLeft(ok.unionByName(quarantined))(_ unionByName _)
-    if (staged.isEmpty) out
-    else graft.operators.Caching.releaseAfterConsumed(out, staged.toSeq: _*)
+    val scored = quality.fold(extracted)(q => docNllFold(extracted, q.stats))
+    val gated = Expectations.gateRows(scored, rules)
+    val marked = decontam.fold(gated)(d => Dedup.decontaminate(gated,
+      d.evalTexts, d.shingleSize, Dedup.MinSharedPpm(d.minSharedPpm)))
+    // the first verdict that fails names the disposition; a NULL NLL
+    // (a sub-2-token page) fails nothing
+    val disposition = Seq(
+        quality.map(q => (col("avg_nll_u") > q.maxAvgNllMicro) -> "reject_quality"),
+        decontam.map(_ => col("contaminated") -> "reject_contaminated")).flatten
+      .foldLeft(when(!col("admitted"), "quarantine")) {
+        case (c, (fails, d)) => c.when(fails, d)
+      }.otherwise("admit")
+    val admit = col("disposition") === "admit"
+    // pages that are not admitted hash no text, so they take the split's
+    // null-signature path and match no band
+    val split = Dedup.splitStreamMinhash(
+      marked.withColumn("disposition", disposition)
+        .select(col("doc_id"), when(admit, col("text")).as("text"),
+          col("violations"), col("disposition")),
+      index, threshold, minBandCollisions, trainPct, valPct)
+    // `violations` is non-empty exactly on quarantined pages
+    split.select(col("doc_id"),
+      when(admit, col("cluster")).as("cluster"),
+      when(admit, col("n_clusters")).as("n_clusters"),
+      when(admit, col("split")).as("split"),
+      col("violations"), col("disposition"))
   }
 
   /** Per-doc NLL under the frozen bigram LM, append-mode legal: the

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * a number.
   *
   * Usage: runMain graft.tools.StreamThroughputProbe [sfDir] [replicas] [out]
-  * Writes `out` (default docs/perf/STREAM_THROUGHPUT_r19.txt).
+  * Writes `out` (default docs/perf/STREAM_THROUGHPUT_r20.txt).
   */
 object StreamThroughputProbe {
   private def page(text: String): String =
@@ -27,7 +27,7 @@ object StreamThroughputProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val replicas = if (args.length > 1) args(1).toInt else 20
     val outPath = if (args.length > 2) args(2)
-      else "docs/perf/STREAM_THROUGHPUT_r19.txt"
+      else "docs/perf/STREAM_THROUGHPUT_r20.txt"
     val spark = graft.GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

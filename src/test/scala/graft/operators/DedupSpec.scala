@@ -1244,6 +1244,33 @@ class DedupSpec extends SparkSpecBase {
     assert(plan.contains("ShuffledHashJoin"), s"expected shuffled hash joins:\n$plan")
   }
 
+  test("splitStreamMinhash carries its input's other columns unchanged") {
+    val docs = graft.Tables.documents(spark, Sf0001).filter(col("text").isNotNull)
+    val isNew = col("doc_id") % 5 === 0
+    val corpus = docs.filter(!isNew)
+    val labels = Dedup.contractedComponents(
+      Dedup.jaccardPairs(corpus, 0.5).select("doc_id_a", "doc_id_b"))
+    val idx = Dedup.minhashSplitIndex(corpus, labels)
+    val arrivals = docs.filter(isNew)
+      .select(col("doc_id"), col("text"), concat(lit("tag-"), col("doc_id")).as("tag"))
+    def splitOf(in: org.apache.spark.sql.DataFrame) =
+      Dedup.splitStreamMinhash(in, idx, threshold = 0.5)
+    val plain = splitOf(arrivals.select("doc_id", "text"))
+    val tagged = splitOf(arrivals)
+    assert(plain.columns.toSeq == Seq("doc_id", "cluster", "n_clusters", "split"))
+    assert(tagged.columns.toSeq == plain.columns.toSeq :+ "tag")
+    val got = tagged.collect().map(r => r.getLong(0) -> r).toMap
+    val want = plain.collect().map(r => r.getLong(0) -> r).toMap
+    assert(got.size == want.size && got.size > 0)
+    assert(got.values.exists(r => r.getLong(1) != r.getLong(0)),
+      "no arrival inherited a cluster — the carried column met no band match")
+    want.foreach { case (id, w) =>
+      val g = got(id)
+      assert(g.toSeq.take(4) == w.toSeq, s"arrival $id: $g != $w")
+      assert(g.getString(4) == s"tag-$id", s"arrival $id carried ${g.get(4)}")
+    }
+  }
+
   test("admitStreamMinhash never broadcasts the corpus-derived index") {
     val docs = graft.Tables.documents(spark, Sf0001).filter(col("text").isNotNull)
     val isNew = col("doc_id") % 5 === 0

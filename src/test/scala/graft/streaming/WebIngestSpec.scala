@@ -112,8 +112,16 @@ class WebIngestSpec extends SparkSpecBase {
         ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)),
           r.getSeq[String](4).toList, r.getString(5)))).toMap
 
-    val batch = canon(WebIngest.ingest(arrivals, idx, rules, threshold = 0.5,
-      quality = Some(quality), decontam = Some(decontam)))
+    val batchDf = WebIngest.ingest(arrivals, idx, rules, threshold = 0.5,
+      quality = Some(quality), decontam = Some(decontam))
+    // one pass: no union of disposition branches, no persisted stage
+    val plan = batchDf.queryExecution.optimizedPlan
+    assert(plan.collectFirst { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }
+      .isEmpty, "the dispositions are a union of branches")
+    assert(plan.collectFirst {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    }.isEmpty, "a stage is persisted")
+    val batch = canon(batchDf)
     assert(batch(99999L)._5 == "quarantine")
     assert(batch(99998L)._5 == "reject_quality")
     assert(batch(99997L)._5 == "reject_contaminated")
@@ -142,11 +150,57 @@ class WebIngestSpec extends SparkSpecBase {
       .format("memory").queryName("web_ingest_q").start()
     try {
       val (a, b) = arrivalRows.splitAt(arrivalRows.length / 2)
-      input.addData(a.toSeq); q.processAllAvailable()
-      input.addData(b.toSeq); q.processAllAvailable()
+      // each micro-batch reads its rows once and folds the NLL once
+      def onePass(added: Int): Unit = {
+        val p = q.lastProgress
+        assert(p.numInputRows == added, s"source read more than once:\n$p")
+        assert(p.stateOperators.length == 1, s"NLL fold planned more than once:\n$p")
+      }
+      input.addData(a.toSeq); q.processAllAvailable(); onePass(a.length)
+      input.addData(b.toSeq); q.processAllAvailable(); onePass(b.length)
       assert(canon(spark.table("web_ingest_q")) == batch,
         "MemoryStream ingest diverged from the batch run")
     } finally q.stop()
+  }
+
+  test("a second streaming query over the same pages compiles no class") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    val docs = graft.Tables.documents(spark, Sf0001)
+      .filter(col("text").isNotNull)
+    val isNew = col("doc_id") >= 400
+    val corpus = docs.filter(!isNew)
+    val labels = Dedup.contractedComponents(
+      Dedup.jaccardPairsForest(corpus, threshold = 0.5)
+        .select("doc_id_a", "doc_id_b"))
+    val raw = Dedup.minhashSplitIndex(corpus, labels)
+    val idx = raw.copy(bandMaps = raw.bandMaps.map(_.localCheckpoint()))
+    val arrivalRows = docs.filter(isNew).select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), page(r.getString(1)))).toSeq
+    // the compile counter is JVM-global: exact only while nothing else runs
+    assert(spark.streams.active.isEmpty)
+    def runStream(name: String): Long = {
+      val c0 = graft.PerfMeters.codegenCompiles()
+      val input = MemoryStream[(Long, String)]
+      val q = WebIngest.ingest(input.toDF().toDF("doc_id", "html"),
+          idx, rules, threshold = 0.5)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      try {
+        arrivalRows.grouped((arrivalRows.size + 1) / 2).foreach { g =>
+          input.addData(g); q.processAllAvailable()
+        }
+      } finally q.stop()
+      spark.catalog.dropTempView(name)
+      graft.PerfMeters.codegenCompiles() - c0
+    }
+    val first = runStream("web_ingest_cold")
+    val second = runStream("web_ingest_warm")
+    info(s"classes compiled: first query $first, second query $second")
+    // with a class loader per session, each new query's cloned session
+    // recompiled every task-side class
+    assert(second == 0, s"the second query compiled $second classes")
   }
 
   test("large-eval decontam routes through the Bloom shape: same verdicts, no plan literal") {
