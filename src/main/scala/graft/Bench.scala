@@ -137,16 +137,11 @@ object Bench {
                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
                 warmupsMax: Int) = {
       // cache isolation BETWEEN queries: no query may ride a cache another
-      // query built, and the full run doesn't accumulate executor memory.
-      // Since Caching.releaseAfterConsumed (round 9), self-persisting
-      // queries (q76/q102/q129/q131/q134) also release their own cache
-      // after each run's terminal action. The release is ASYNC
-      // (non-blocking listener), so an individual timed run may still
-      // ride the previous run's entry or rebuild from scratch depending
-      // on listener-bus timing — min-of-3 reports the warmest observed
-      // run either way, which is the stable statistic across
-      // invocations; per-run spread for these queries measures cache
-      // pricing, not code.
+      // query built. No declared query leaves a cache entry of its own:
+      // eager bodies unpersist in a finally, and lazily returned queries
+      // keep their intermediates as checkpoints of their own frames
+      // (operators.Checkpoints), which no later run can read and the
+      // ContextCleaner frees once a run's frame is dropped.
       spark.sharedState.cacheManager.clearCache()
       // ADAPTIVE warm-up (round-13 verdict ask #3 — end the phantom-
       // regression adjudication loop): one fixed warm-up was measurably

@@ -31,9 +31,9 @@ object Verify {
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.view.filterKeys(names).toMap)
     selected.foreach { case (name, fn) =>
-      // cache isolation: a few queries persist intra-query intermediates
-      // (q102/q129/q131, Dashboard); clear between queries so no query
-      // reads another's cache and memory doesn't accumulate over 130 dumps
+      // cache isolation: Dashboard's frames stay cached past their query;
+      // clear between queries so no query reads another's cache and memory
+      // doesn't accumulate over the dumps
       spark.sharedState.cacheManager.clearCache()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -35,8 +35,19 @@ object Dedup {
     */
   private[graft] def capGroups(df: DataFrame, keys: Seq[String], cap: Int,
                                metricName: String): DataFrame =
+    fenceGroups(groupSized(df, keys), cap, metricName)
+
+  /** [[capGroups]]' window: each row's group size as `__gsz`. */
+  private def groupSized(df: DataFrame, keys: Seq[String]): DataFrame =
     df.withColumn("__gsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
+      org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
+
+  /** [[capGroups]]' observation and filter over a [[groupSized]] frame —
+    * split out so a frame sized once can be fenced by several readers.
+    */
+  private def fenceGroups(sized: DataFrame, cap: Int,
+                          metricName: String): DataFrame =
+    sized
       .observe(metricName,
         sum(when(col("__gsz") > cap, 1L).otherwise(0L)).as("dropped_rows"),
         round(sum(when(col("__gsz") > cap, lit(1.0) / col("__gsz"))
@@ -518,29 +529,19 @@ object Dedup {
     // are freed by the ContextCleaner when the plan is GC'd. Same
     // executor-loss caveat as the CC loop's localCheckpoint (documented
     // there, with checkpoint() as the long-cluster-run alternative).
-    // eager = false: materialization waits for the first ACTION over the
-    // returned frame — plan construction stays job-free (callers that
-    // build-but-never-run the plan pay nothing), and both consumers still
-    // share the one materialized copy once it runs.
+    // eager = false: the blocks are stored by the first ACTION over the
+    // returned frame, and both consumers share that one copy. Creating the
+    // checkpoint already runs the window's shuffle (Checkpoints.local).
     val sizedOpt =
       if (!routed) None
-      else Some(bandedBuckets(withSig, bands, rows)
-        .withColumn("__gsz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")))
+      else Some(groupSized(bandedBuckets(withSig, bands, rows), Seq("band", "bucket"))
         .localCheckpoint(eager = false))
     val candidates = sizedOpt match {
       case None => lshCandidates(withSig, bands, rows, minBandCollisions, maxBucketSize)
       case Some(sized) =>
-        // capGroups' filter + metrics, inlined over the shared frame so the
-        // window runs once and the observed counts stay identical
-        val banded = sized
-          .observe("graft_q25_bucket_cap",
-            sum(when(col("__gsz") > maxBucketSize, 1L).otherwise(0L)).as("dropped_rows"),
-            round(sum(when(col("__gsz") > maxBucketSize, lit(1.0) / col("__gsz"))
-              .otherwise(0.0)), 0).as("dropped_groups"),
-            max(col("__gsz")).as("max_group_size"))
-          .filter(col("__gsz") <= maxBucketSize)
-          .drop("__gsz")
+        // fenced over the shared frame, so the window runs once and the
+        // observed counts stay identical
+        val banded = fenceGroups(sized, maxBucketSize, "graft_q25_bucket_cap")
         banded.as("a")
           .join(banded.as("b"), Seq("band", "bucket"))
           .filter(col("a.doc_id") < col("b.doc_id"))
@@ -1148,14 +1149,14 @@ object Dedup {
         checkpointDir, eager = false)
       changed = next.join(labels.withColumnRenamed("component", "old"), "id")
         .filter(col("component") =!= col("old")).count()
-      freeCheckpoint(labels)
+      Checkpoints.free(labels)
       labels = next
       it += 1
     }
     // unconverged labels are WRONG labels (some doc still carries an
     // intermediate id) — fail loudly, never return them
     if (changed > 0) {
-      freeCheckpoint(sym); freeCheckpoint(labels)
+      Checkpoints.free(sym); Checkpoints.free(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds ($changed " +
           "labels still moving) — the pair graph has a longer diameter than " +
@@ -1163,7 +1164,7 @@ object Dedup {
           "algorithm = \"star\" (large-star/small-star, O(log n) rounds) " +
           "for adversarial chain graphs")
     }
-    freeCheckpoint(sym)
+    Checkpoints.free(sym)
     labels.select(col("id").as("doc_id"), col("component"))
   }
 
@@ -1228,14 +1229,14 @@ object Dedup {
       // lazy checkpoint: the checksum is the round's materializing action
       val next = ckpt(small, checkpointDir, eager = false)
       val nsig = checksum(next)
-      freeCheckpoint(edges)
+      Checkpoints.free(edges)
       edges = next
       converged = nsig == sig
       sig = nsig
       rounds += 1
     }
     if (!converged) {
-      freeCheckpoint(edges)
+      Checkpoints.free(edges)
       throw new IllegalStateException(
         s"starComponents did not converge in $maxIters rounds — " +
           "O(log n) rounds should far undercut this; raise maxIters")
@@ -1255,7 +1256,7 @@ object Dedup {
     val violations = multiViol.union(chainViol)
       .groupBy("viol").agg(count(lit(1)).as("n")).collect()
     if (violations.nonEmpty) {
-      freeCheckpoint(edges)
+      Checkpoints.free(edges)
       throw new IllegalStateException(
         "starComponents fixed point is not a star forest (" +
           violations.map(r => s"${r.getString(0)}: ${r.getLong(1)}").mkString(", ") +
@@ -1265,16 +1266,6 @@ object Dedup {
       .select(col("id").as("doc_id"), coalesce(col("v"), col("id")).as("component"))
     (labels, rounds)
   }
-
-  /** Frees the executor blocks behind a localCheckpoint'ed frame (the
-    * LogicalRDD's backing RDD). Dataset.unpersist only talks to the
-    * CacheManager and ignores checkpoint storage.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** A decontamination threshold on `n_shared`, the number of a doc's
     * distinct shingles found in the eval set. [[MinShared]] is an absolute
@@ -2274,8 +2265,8 @@ object Dedup {
     * Per-vector cell ranking is ONE hash aggregate (BoundedTopK over the
     * broadcast-centroid cross join — O(nProbe) state per vector, no
     * window, no per-vector sort task); the pair walk partitions the
-    * assignment on cid once, persists it at that partitioning, and
-    * self-joins the cache exchange-free (both sides already
+    * assignment on cid once, checkpoints it at that partitioning, and
+    * self-joins the checkpoint exchange-free (both sides already
     * hash(cid)-distributed); duplicate emissions (a pair meets in up to
     * nProbe shared cells, bit-identical cosine each time) collapse in
     * one DISTINCT over the surviving output pairs.
@@ -2318,11 +2309,10 @@ object Dedup {
     // reuse provably never unified the branches (tools.ReuseProbe:
     // CollectMetrics + differing projections + broadcast joins in the
     // subtree break canonical equality). Now the assignment is
-    // partitioned ON cid exactly once (the cap fence's window already
-    // imposes hash(cid); the uncapped route adds an explicit
-    // repartition) and PERSISTED at that partitioning, so:
+    // partitioned ON cid exactly once (an explicit repartition, which the
+    // cap fence's window reuses) and CHECKPOINTED at that partitioning, so:
     //   1. the ranking pipeline executes exactly once, and
-    //   2. the a/b self-join reads BOTH sides from the cache already
+    //   2. the a/b self-join reads BOTH sides from the checkpoint already
     //      hash(cid)-distributed — EnsureRequirements elides both join
     //      exchanges; the join costs sorts, not shuffles.
     // Pair dedup (a pair meets in up to nProbe shared cells, with
@@ -2332,27 +2322,28 @@ object Dedup {
     // (post-threshold, output-sized): it shuffles only what the walk
     // emits. Net plan: three exchanges total (BoundedTopK agg, the one
     // cid partitioning, the dedup) where the old shape paid the pipeline
-    // twice plus two windows. Cache footprint is nProbe × corpus rows
-    // with the 64-dim vector (MEMORY_AND_DISK, spills, released by the
-    // caller's terminal action through the Caching listener) — the same
-    // bytes the old shape re-shuffled through its second cid exchange.
-    val assigned =
-      if (maxBlockSize == Int.MaxValue) assigned0.repartition(col("cid"))
-      else capGroups(assigned0, Seq("cid"), maxBlockSize,
-        "graft_q29_cell_cap")
-    val cached = assigned
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = cached.select(col("cid"), col("vec_id").as("vec_id_a"),
+    // twice plus two windows. The checkpoint holds nProbe × corpus rows
+    // with the 64-dim vector (MEMORY_AND_DISK, spills; Checkpoints has its
+    // lifetime) — the same bytes the old shape re-shuffled through its
+    // second cid exchange.
+    // The cap's window is checkpointed with the cells and its fence reads
+    // the checkpoint, so the graft_q29_cell_cap observation lands in the
+    // caller's query, where the checkpoint's own query would hide it.
+    val byCell = Checkpoints.hashed(assigned0, "cid")
+    val cells =
+      if (maxBlockSize == Int.MaxValue) Checkpoints.local(byCell)
+      else fenceGroups(Checkpoints.local(groupSized(byCell, Seq("cid"))),
+        maxBlockSize, "graft_q29_cell_cap")
+    val a = cells.select(col("cid"), col("vec_id").as("vec_id_a"),
       col("e").as("e_a"), col("nrm").as("nrm_a"))
-    val b = cached.select(col("cid"), col("vec_id").as("vec_id_b"),
+    val b = cells.select(col("cid"), col("vec_id").as("vec_id_b"),
       col("e").as("e_b"), col("nrm").as("nrm_b"))
-    val out = a.join(b, Seq("cid"))
+    a.join(b, Seq("cid"))
       .filter(col("vec_id_a") < col("vec_id_b"))
       .withColumn("cos", dot(col("e_a"), col("e_b")) / (col("nrm_a") * col("nrm_b")))
       .filter(col("cos") >= threshold)
       .select(col("vec_id_a"), col("vec_id_b"), round(col("cos"), 6).as("cos_sim"))
       .distinct()
-    Caching.releaseAfterConsumed(out, cached)
   }
 
   /** Substring-level exact dedup (Lee et al. 2022, "Deduplicating Training

@@ -132,11 +132,7 @@ object Expectations {
       val s = batch.sparkSession
       import scala.jdk.CollectionConverters._
       s.createDataFrame(reportRows.toSeq.asJava, report.schema)
-    } finally pinned.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => () // checkpoint shape changed upstream: ContextCleaner path
-    }
+    } finally Checkpoints.free(pinned)
   }
 
   /** Referential-integrity expectation: rows of `child` whose `childKey`

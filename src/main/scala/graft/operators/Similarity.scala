@@ -245,7 +245,7 @@ object Similarity {
     * single bounded-heap groupBy on (side, id) computes both argmax
     * tables in one shuffle. Map-side k=1 heaps collapse the 2× exploded
     * rows to ≤ 2·(|A|+|B|) partials per partition before the shuffle,
-    * and only the tiny (|A|+|B|)-row argmax frame is persisted for the
+    * and only the tiny (|A|+|B|)-row argmax frame is checkpointed for the
     * mutual self-join — never the A×B pair frame, which at scale dwarfs
     * both inputs. (The earlier two-groupBy formulation recomputed the
     * whole cross-join per direction — measured ~2× the total cost.)
@@ -266,10 +266,9 @@ object Similarity {
     *  - "auto" — probe |B| with a LIMIT-bounded count (scans at most
     *    broadcastRowLimit+1 rows) and pick accordingly.
     *
-    * Cache lifetime: the persisted argmax frame ((|A|+|B|) rows × 4
-    * columns) releases itself after the caller's terminal action
-    * (Caching.releaseAfterConsumed); if no action ever runs, the entry
-    * stays registered exactly as an unmanaged persist would.
+    * The argmax frame ((|A|+|B|) rows × 4 columns) is a lazy checkpoint
+    * (Checkpoints): creating it runs the scoring shuffle, the caller's
+    * first action stores it, and its blocks go with the returned frame.
     */
   def mutualTop1(embA: DataFrame, embB: DataFrame,
                  strategy: String = "auto",
@@ -294,7 +293,7 @@ object Similarity {
           .withColumn("cos", dot(col("ae"), col("be")) / (col("anrm") * col("bnrm")))
           .select("aid", "bid", "cos")
       else ivfScoredPairs(a, b, nList, nProbe)
-    val best = scored.select(explode(array(
+    val best = Checkpoints.local(scored.select(explode(array(
         struct(lit(0).as("side"), col("aid").as("id"), col("cos"),
           col("bid").as("partner")),
         struct(lit(1).as("side"), col("bid").as("id"), col("cos"),
@@ -306,15 +305,13 @@ object Similarity {
         struct(col("cos"), col("partner")), 1, desc = Seq(true, false)).as("t"))
       .select(col("side"), col("id"),
         col("t")(0).getField("partner").as("partner"),
-        col("t")(0).getField("cos").as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("t")(0).getField("cos").as("cos")))
     val aBest = best.filter(col("side") === 0)
       .select(col("id").as("aid"), col("partner").as("bid"), col("cos"))
     val bBest = best.filter(col("side") === 1)
       .select(col("id").as("bid2"), col("partner").as("aid2"))
-    val res = aBest.join(bBest, col("aid") === col("aid2") && col("bid") === col("bid2"))
+    aBest.join(bBest, col("aid") === col("aid2") && col("bid") === col("bid2"))
       .select(col("aid"), col("bid"), round(col("cos"), 6).as("cos_sim"))
-    Caching.releaseAfterConsumed(res, best)
   }
 
   /** mutualTop1's non-broadcast scoring join: IVF cell-keyed candidate

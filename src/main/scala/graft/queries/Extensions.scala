@@ -598,19 +598,18 @@ object Extensions {
     */
   def q249ForestPairCensus(s: SparkSession, dir: String): DataFrame = {
     // the forest feeds TWO consumers (the resolver and the pair-mass
-    // join) — left lazy, the rep²-block walk would run twice; persist
-    // once, released by the scoped listener (the q99 device)
-    val forest = Dedup.jaccardPairsForest(Tables.documents(s, dir),
-        threshold = 0.8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // join) — left lazy, the rep²-block walk would run twice; a checkpoint
+    // computes it once (the q99 device). Eager: the walk ends in a join,
+    // and the joins over the forest broadcast it only on its measured size.
+    val forest = graft.operators.Checkpoints.local(
+      Dedup.jaccardPairsForest(Tables.documents(s, dir), threshold = 0.8), eager = true)
     val labels = Dedup.contractedComponents(
       forest.select("doc_id_a", "doc_id_b"), stitch = "star")
     val mass = forest
       .join(labels.withColumnRenamed("doc_id", "doc_id_a"), Seq("doc_id_a"))
       .groupBy("component").agg(sum("n_pairs").as("pair_mass"))
-    val out = labels.groupBy("component").agg(count(lit(1)).as("n_docs"))
+    labels.groupBy("component").agg(count(lit(1)).as("n_docs"))
       .join(mass, Seq("component"))
-    graft.operators.Caching.releaseAfterConsumed(out, forest)
   }
 
   /** q250: dedup resolution over the CONTAINMENT forest walk (round 17) —

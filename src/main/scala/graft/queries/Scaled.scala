@@ -247,20 +247,19 @@ object Scaled {
     * real-valued metrics where a histogram won't collapse, q79's
     * chunkedPrefix ranking remains the right shape.
     *
-    * The tokenized 2-column projection IS persisted (it feeds both
-    * histograms plus the fence count) and released after the caller's
-    * terminal action (Caching.releaseAfterConsumed). Float safety:
-    * medians of integers live on the .5 grid, deviations on the .5 grid,
-    * MAD on the .25 grid — all exact in IEEE doubles, so the hash gate
-    * holds.
+    * The tokenized 2-column projection is a lazy checkpoint (it feeds
+    * both histograms plus the fence count; operators.Checkpoints).
+    * Float safety: medians of integers live on the .5 grid, deviations
+    * on the .5 grid, MAD on the .25 grid — all exact in IEEE doubles, so
+    * the hash gate holds.
     */
   def q131MadOutliers(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val b = Tables.documents(s, dir).filter(col("text").isNotNull)
-      .select(col("source"),
-        graft.functions.TextFunctions.tokenCount(col("text")).cast("long")
-          .as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = graft.operators.Checkpoints.local(
+      Tables.documents(s, dir).filter(col("text").isNotNull)
+        .select(col("source"),
+          graft.functions.TextFunctions.tokenCount(col("text")).cast("long")
+            .as("x")))
     // exact per-source median via the value histogram: rank r's value is
     // the histogram row whose [cum − c + 1, cum] interval covers r; the
     // median is the mean of the values at ranks ⌊(n+1)/2⌋ and ⌊(n+2)/2⌋
@@ -286,12 +285,11 @@ object Scaled {
     val d = b.join(broadcast(med), "source")
       .withColumn("dev", abs(col("x") - col("median_tokens")))
     val mad = medianOf(d.select(col("source"), col("dev")), "dev", "mad")
-    val res = d.join(broadcast(mad), "source")
+    d.join(broadcast(mad), "source")
       .groupBy("source")
       .agg(min("median_tokens").as("median_tokens"), min("mad").as("mad"),
         sum(when(col("dev") > lit(3.0) * col("mad"), 1L).otherwise(0L))
           .as("n_outliers"))
-    graft.operators.Caching.releaseAfterConsumed(res, b)
   }
 
   /** q129: mutual top-1 embedding alignment between two label slices

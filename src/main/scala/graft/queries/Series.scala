@@ -273,7 +273,8 @@ object Series {
     * rank identically. Scores = ((rn−1)·4 DIV n) + 1.
     */
   def q193RfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.orders(s, dir)
+    // one customer aggregate read by all three rankings: a lazy checkpoint
+    val base = graft.operators.Checkpoints.local(Tables.orders(s, dir)
       .groupBy(col("o_custkey").as("cust"))
       // o_orderdate is TIMESTAMP_NTZ in the fixtures; the session runs
       // UTC, so the cast is value-preserving (the RangeJoin device)
@@ -282,8 +283,7 @@ object Series {
         count(lit(1)).as("freq"),
         sum(col("o_totalprice")
           .cast(org.apache.spark.sql.types.DecimalType(28, 2)))
-          .cast("double").as("mon"))
-      .persist()
+          .cast("double").as("mon")))
     def score(metric: String, as: String): DataFrame =
       graft.operators.StratifiedSelect.chunkedPrefix(
         base.select(col("cust"), col(metric)).withColumn("g", lit("all")),
@@ -291,13 +291,12 @@ object Series {
         value = lit(1L), nChunks = 8)
         .select(col("cust"),
           (expr("((rn - 1) * 4) DIV n_stratum") + 1).cast("int").as(as))
-    val out = score("last_day", "r_score")
+    score("last_day", "r_score")
       .join(score("freq", "f_score"), "cust")
       .join(score("mon", "m_score"), "cust")
       .groupBy("r_score", "f_score", "m_score")
       .agg(count(lit(1)).as("n_customers"))
       .orderBy("r_score", "f_score", "m_score")
-    graft.operators.Caching.releaseAfterConsumed(out, base)
   }
 
   /** q196: freshness-decayed engagement score per event type — each

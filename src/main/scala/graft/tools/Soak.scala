@@ -2,13 +2,13 @@ package graft.tools
 
 /** Repro harness for run-to-run latency drift: repeats graft.Bench's exact
   * per-query protocol (clearCache, then 4 consecutive invocations) N times
-  * in one JVM, printing every run plus the two leak candidates the round-10
-  * verdict named — active release-listeners and cached-plan count — before
-  * each iteration, and after it the generated classes compiled, the
-  * driver's loaded/unloaded class counts and its metaspace. A genuine
-  * accumulation pathology (listener leak, cache growth, codegen cache
-  * churn) shows as a monotonic trend across iterations on an idle host;
-  * flat times say the bad capture was host contention.
+  * in one JVM, printing every run plus the cached-plan count before each
+  * iteration, and after it the executor's stored block bytes once a GC has
+  * let the ContextCleaner free dropped checkpoints, the generated classes
+  * compiled, the driver's loaded/unloaded class counts and its metaspace.
+  * A genuine accumulation pathology (checkpoint or cache growth, codegen
+  * cache churn) shows as a monotonic trend across iterations on an idle
+  * host; flat times say the bad capture was host contention.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.Soak <iters> q76_profile_approx [more...]
   */
@@ -36,6 +36,20 @@ object Soak {
         case o => o.toString.take(20)
       }
     } catch { case _: Throwable => "?" }
+    // bytes of every cached or checkpointed block, memory and disk, after a
+    // GC: the ContextCleaner frees the blocks of unreachable checkpoints on
+    // its own thread, so the sum is read once it has held for a second
+    def storedBytes(): Long = {
+      def sum() = spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+      System.gc()
+      var (last, same, polls) = (sum(), 0, 0)
+      while (same < 10 && polls < 50) {
+        Thread.sleep(100); polls += 1
+        val cur = sum()
+        if (cur == last) same += 1 else { last = cur; same = 0 }
+      }
+      last
+    }
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(1).mkString
@@ -71,7 +85,7 @@ object Soak {
       println(s"== $name ==")
       val mins = (1 to iters).map { i =>
         spark.sharedState.cacheManager.clearCache()
-        val pre = s"listeners=${graft.operators.Caching.activeListeners.get} cached=${cachedCount()} load=${loadavg()}"
+        val pre = s"cached=${cachedCount()} load=${loadavg()}"
         val (gc0, cpu0) = (gcMs(), psiUs("cpu"))
         val (pcpu0, tcpu0) = (graft.PerfMeters.procCpuMs(), taskCpu.cpuNs.get())
         val cg0 = graft.PerfMeters.codegenCompiles()
@@ -82,12 +96,12 @@ object Soak {
         }
         val cpuMs = if (pcpu0 < 0) -1L else graft.PerfMeters.procCpuMs() - pcpu0
         val tCpuMs = (taskCpu.cpuNs.get() - tcpu0) / 1000000L
-        println(f"[$name iter $i%2d] $pre gc_ms=${gcMs() - gc0} heap_mb=${heapMb()} psi_cpu_us=${if (cpu0 < 0) -1L else psiUs("cpu") - cpu0} cpu_ms=$cpuMs task_cpu_ms=$tCpuMs codegen_compiles=${graft.PerfMeters.codegenCompiles() - cg0} ${classMem()}  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
+        println(f"[$name iter $i%2d] $pre gc_ms=${gcMs() - gc0} heap_mb=${heapMb()} psi_cpu_us=${if (cpu0 < 0) -1L else psiUs("cpu") - cpu0} cpu_ms=$cpuMs task_cpu_ms=$tCpuMs codegen_compiles=${graft.PerfMeters.codegenCompiles() - cg0} stored_bytes=${storedBytes()} ${classMem()}  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
         runs.tail.min
       }
       println(f"[$name] min-of-3 per iter: ${mins.map(m => f"$m%.3f").mkString(",")}  spread=${mins.max / mins.min}%.2fx")
     }
-    println(s"[soak] final listeners=${graft.operators.Caching.activeListeners.get} cached=${cachedCount()} ${classMem()}")
+    println(s"[soak] final cached=${cachedCount()} stored_bytes=${storedBytes()} ${classMem()}")
     spark.stop()
   }
 }

@@ -1,12 +1,15 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the `private[sql]` classic Column <-> Expression converters —
+/** Bridge into `private[sql]` classic converters: Column <-> Expression,
   * the supported way for libraries to expose custom Catalyst expressions as
-  * `Column`s under Spark 4's Column-node API.
+  * `Column`s under Spark 4's Column-node API, and LogicalPlan -> DataFrame.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 }

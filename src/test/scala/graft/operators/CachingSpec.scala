@@ -1,70 +1,104 @@
 package graft.operators
 
-import graft.SparkSpecBase
+import graft.IntermediateLifetime
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.scalatest.time.{Seconds, Span}
 
-/** Pins the scoped-release contract: every declared query that persists an
-  * intermediate leaves `sharedState.cacheManager` EMPTY once its terminal
-  * action completes — repeated invocation in a long-lived session must not
-  * accumulate cache entries (the round-8 "already cached" leak).
-  * Listener delivery is async, so emptiness is awaited, not asserted
-  * immediately.
+/** Pins the intermediate-lifetime rule (Checkpoints) on the declared queries
+  * that keep an intermediate: none registers a CacheManager entry at any
+  * point, and a long-lived session that loops them keeps no block once
+  * their frames are dropped (the round-8 "already cached" leak).
   */
-class CachingSpec extends SparkSpecBase {
-
-  private def awaitCacheEmpty(clue: String): Unit = {
-    val deadline = System.currentTimeMillis() + 30000
-    while (!spark.sharedState.cacheManager.isEmpty &&
-           System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      s"$clue: cache entries still registered after the terminal action")
-  }
-
-  test("releaseAfterConsumed frees the cache after the consuming action") {
-    spark.catalog.clearCache()
-    val cached = spark.range(1000).toDF("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = Caching.releaseAfterConsumed(
-      cached.agg(sum("id").as("s")), cached)
-    assert(!spark.sharedState.cacheManager.isEmpty, "persist must register")
-    assert(res.head().getLong(0) === 499500L)
-    awaitCacheEmpty("direct helper use")
-  }
-
-  test("an unrelated action does not release the cache early") {
-    spark.catalog.clearCache()
-    val cached = spark.range(100).toDF("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = Caching.releaseAfterConsumed(
-      cached.agg(count(lit(1)).as("n")), cached)
-    // unrelated actions before the consuming one — the listener must not
-    // match them (subtree sameResult gate)
-    spark.range(10).count()
-    spark.range(20).toDF("id").agg(sum("id")).collect()
-    Thread.sleep(1000) // let any (wrong) async release land
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "unrelated action must not release the cache")
-    assert(res.head().getLong(0) === 100L)
-    awaitCacheEmpty("after the real consumer")
-  }
+class CachingSpec extends IntermediateLifetime {
 
   test("repeated q131 invocations leave no cache entries behind") {
-    spark.catalog.clearCache()
-    (1 to 3).foreach { _ =>
-      val out = graft.queries.Scaled.q131MadOutliers(spark, Sf0001)
-      assert(out.count() > 0)
+    val counts = leavesNothing("q131", times = 3) {
+      graft.queries.Scaled.q131MadOutliers(spark, Sf0001)
     }
-    awaitCacheEmpty("q131 × 3")
+    assert(counts.forall(_ > 0))
   }
 
   test("q102 and mutualTop1 release their persists after the action") {
-    spark.catalog.clearCache()
-    assert(graft.queries.Scaled.q102ProfileBanded(spark, Sf0001).count() === 4L)
-    awaitCacheEmpty("q102")
+    assert(leavesNothing("q102") {
+      graft.queries.Scaled.q102ProfileBanded(spark, Sf0001)
+    } == Seq(4L))
     val emb = graft.Tables.embeddings(spark, Sf0001)
-    val pairs = Similarity.mutualTop1(
-      emb.filter(col("label") === 0), emb.filter(col("label") === 1))
-    assert(pairs.count() > 0)
-    awaitCacheEmpty("mutualTop1")
+    assert(leavesNothing("mutualTop1") {
+      Similarity.mutualTop1(emb.filter(col("label") === 0), emb.filter(col("label") === 1))
+    }.head > 0)
+  }
+
+  test("q193, q249 and the cells route keep no cache entry and free their checkpoints") {
+    assert(leavesNothing("q193", times = 2) {
+      graft.queries.Series.q193RfmSegments(spark, Sf0001)
+    }.forall(_ > 0))
+    assert(leavesNothing("q249", times = 2) {
+      graft.queries.Extensions.q249ForestPairCensus(spark, Sf0001)
+    }.forall(_ > 0))
+    val emb = graft.Tables.embeddings(spark, Sf0001)
+    assert(leavesNothing("cells", times = 2) {
+      Dedup.embeddingNearDupsCells(emb, threshold = 0.3, maxBlockSize = 1 << 20)
+    }.forall(_ > 0))
+  }
+
+  test("a lazy checkpoint keeps its input's hash partitioning") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val keyed = spark.range(2000).select((col("id") % 37).as("k"), col("id"))
+      val ck = Checkpoints.local(keyed.repartition(col("k")))
+      // the shuffle under the checkpoint runs when it is created, as a job
+      // of its own; the final stage waits for the first action
+      eventually(timeout(Span(10, Seconds))) {
+        assert(jobs.get() >= 1, "creating the checkpoint ran no job")
+      }
+      val rdd = ck.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }
+      assert(rdd.size == 1)
+      assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.head),
+        "a lazy checkpoint stored blocks before any action")
+      // an aggregation on the key reads it with no exchange, and so does a
+      // sort-merge self-join once the partition count is the explicit one
+      // of Checkpoints.hashed, which AQE does not coalesce
+      val agg = ck.groupBy("k").agg(count(lit(1)).as("n"))
+      assert(agg.collect().map(_.getLong(1)).sum == 2000L)
+      val byCount = Checkpoints.local(Checkpoints.hashed(keyed, "k"))
+      val self = byCount.as("a").join(byCount.as("b").hint("merge"), Seq("k"))
+        .agg(count(lit(1)))
+      assert(self.collect().head.getLong(0) == (0 until 37).map { k =>
+        val n = (0 until 2000).count(_ % 37 == k).toLong; n * n }.sum)
+      for (df <- Seq(agg, self)) {
+        val nodes = executedNodes(df)
+        // the count's final gather is the one exchange allowed
+        assert(!nodes.exists {
+          case e: ShuffleExchangeExec => e.outputPartitioning != SinglePartition
+          case _ => false
+        },
+          s"the key's partitioning was lost:\n${df.queryExecution.executedPlan}")
+        assert(nodes.exists(_.isInstanceOf[RDDScanExec]))
+      }
+      assert(spark.sparkContext.getRDDStorageInfo.exists(_.id == rdd.head),
+        "the first action did not store the checkpoint")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the cells self-join reads the cid-partitioned checkpoint with no exchange") {
+    val emb = graft.Tables.embeddings(spark, Sf0001)
+    for (cap <- Seq(Int.MaxValue, 1 << 20)) {
+      val df = Dedup.embeddingNearDupsCells(emb, threshold = 0.3, maxBlockSize = cap)
+      assert(df.collect().nonEmpty)
+      // one exchange: the DISTINCT over the surviving pairs; the ranking's
+      // shuffles sit under the checkpoint
+      val ex = executedNodes(df).count(_.isInstanceOf[ShuffleExchangeExec])
+      assert(ex == 1, s"cap $cap: $ex exchanges\n${df.queryExecution.executedPlan}")
+    }
   }
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.SparkSpecBase
+import graft.IntermediateLifetime
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-class GraphSpec extends SparkSpecBase {
+class GraphSpec extends IntermediateLifetime {
   import spark.implicits._
 
   /** Independent reference: the integer recurrence computed with plain
@@ -199,7 +200,7 @@ class GraphSpec extends SparkSpecBase {
         uni.map(e => (e._1, e._2)).toDF("src", "dst"), iterations = 3)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(w1 == u1)
-    eventuallyEmptyCache()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   /** Independent reference: brute-force triangle enumeration over all
@@ -298,28 +299,62 @@ class GraphSpec extends SparkSpecBase {
   }
 
   test("triangleStats and bfsLevels release their caches after consumption") {
-    val tri = Graph.triangleStats(Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("x", "y"))
-    assert(tri.count() == 3)
-    eventuallyEmptyCache()
-    val bfs = Graph.bfsLevels(Seq((1L, 2L)).toDF("src", "dst"),
-      Seq(1L).toDF("id"), maxLevel = 2)
-    assert(bfs.count() == 2)
-    eventuallyEmptyCache()
+    assert(leavesNothing("triangleStats") {
+      Graph.triangleStats(Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("x", "y"))
+    } == Seq(3L))
+    assert(leavesNothing("bfsLevels") {
+      Graph.bfsLevels(Seq((1L, 2L)).toDF("src", "dst"), Seq(1L).toDF("id"), maxLevel = 2)
+    } == Seq(2L))
   }
 
   test("pageRank releases its intra-operator caches after consumption") {
-    val planted = Seq("a" -> "b", "b" -> "a").toDF("src", "dst")
-    val pr = Graph.fixedPointPageRank(planted, iterations = 1)
-    assert(pr.count() == 2)
-    // Caching listener fires async on the listener bus — poll
-    eventuallyEmptyCache()
+    val planted = Seq("a" -> "b", "b" -> "a")
+    assert(leavesNothing("fixedPointPageRank") {
+      Graph.fixedPointPageRank(planted.toDF("src", "dst"), iterations = 1)
+    } == Seq(2L))
+    assert(leavesNothing("weightedPageRank") {
+      Graph.weightedPageRank(Seq(("a", "b", 2L), ("b", "a", 1L)).toDF("src", "dst", "w"),
+        iterations = 2)
+    } == Seq(2L))
+    assert(leavesNothing("personalizedPageRank") {
+      Graph.personalizedPageRank(planted.toDF("src", "dst"), Seq("a").toDF("id"),
+        iterations = 2)
+    } == Seq(2L))
+    assert(leavesNothing("hits") {
+      val h = Graph.hits(planted.toDF("src", "dst"), iterations = 2)
+      h.hubs.unionByName(h.authorities)
+    } == Seq(4L))
   }
 
-  private def eventuallyEmptyCache(): Unit = {
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (!spark.sharedState.cacheManager.isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(50)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "persisted edge frame must be released after the consuming action")
+  test("pageRank's rounds read the dst-partitioned edge checkpoint with no exchange") {
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "c").toDF("src", "dst")
+    def exchanges(iterations: Int): Int = {
+      val pr = Graph.fixedPointPageRank(edges, iterations)
+      pr.collect()
+      executedNodes(pr).count(_.isInstanceOf[ShuffleExchangeExec])
+    }
+    // what shuffles is the degree frame, built once whatever the round count
+    assert(exchanges(1) == exchanges(4), s"1 round: ${exchanges(1)}, 4 rounds: ${exchanges(4)}")
+  }
+
+  test("hits serves authorities after hubs were consumed without reading the edges") {
+    val planted = Seq("x" -> "m", "x" -> "n", "x" -> "o", "y" -> "m")
+    val dir = java.nio.file.Files.createTempDirectory("hits-edges").resolve("e").toString
+    planted.toDF("src", "dst").write.parquet(dir)
+    val got = Graph.hits(spark.read.parquet(dir), iterations = 2)
+    val gh = got.hubs.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // no cache entry may serve the second action, not even one released
+    // asynchronously after the first
+    eventually(timeout(org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
+    // a separate action on the other side reads its own half-round
+    // checkpoint: no scan of the source edges, and the reference values
+    val auth = got.authorities
+    val ga = auth.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val scans = executedNodes(auth)
+      .filter(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec])
+    assert(scans.isEmpty, s"authorities re-read the edges:\n${auth.queryExecution.executedPlan}")
+    assert((gh, ga) == referenceHits(planted, 2))
   }
 }

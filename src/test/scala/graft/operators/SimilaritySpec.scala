@@ -427,14 +427,13 @@ class SimilaritySpec extends SparkSpecBase {
     val a = emb.filter(col("label") === 0)
     val b = emb.filter(col("label") === 1)
     val df = Similarity.mutualTop1(a, b)
-    df.collect() // materialize the argmax cache
-    import org.apache.spark.sql.execution.SparkPlan
+    df.collect() // stores the argmax checkpoint
+    import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // AQE wraps stages as leaf nodes; walk through them but stop at the
-    // cache scan (its InMemoryRelation legitimately CONTAINS the one
-    // cross-join evaluation)
+    // AQE wraps stages as leaf nodes; walk through them. The checkpoint
+    // scan is a leaf: the one cross-join evaluation sits in the
+    // checkpoint's own query.
     def deep(p: SparkPlan): Seq[SparkPlan] = {
       val kids = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -444,13 +443,21 @@ class SimilaritySpec extends SparkSpecBase {
       p +: kids.flatMap(deep)
     }
     val nodes = deep(df.queryExecution.executedPlan)
-    // the final plan above the cache is the tiny mutual self-join reading
-    // the SAME cache twice — the cross never re-evaluates per direction
+    // the final plan above the checkpoint is the tiny mutual self-join
+    // reading the SAME checkpoint twice — the cross never re-evaluates per
+    // direction
     assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
-      s"A×B cross-join must not appear above the cache:\n${nodes.head}")
-    val cacheScans = nodes.count(_.isInstanceOf[InMemoryTableScanExec])
-    assert(cacheScans == 2,
-      s"expected both argmax branches to read the cache, saw $cacheScans:\n${nodes.head}")
+      s"A×B cross-join must not appear above the checkpoint:\n${nodes.head}")
+    val ckpt = df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: LogicalRDD => lr.rdd.id
+    }.distinct
+    assert(ckpt.size == 1, s"expected one argmax checkpoint, saw ${ckpt.size}")
+    val scans = nodes.count {
+      case r: RDDScanExec => r.rdd.id == ckpt.head
+      case _ => false
+    }
+    assert(scans == 2,
+      s"expected both argmax branches to read the checkpoint, saw $scans:\n${nodes.head}")
   }
 
   test("admitEmbedding: planted near-dup rejected, distant and empty-cell vectors admitted") {
