@@ -12,7 +12,16 @@ object Bench {
   private final case class QueryCtx(
       gcMs: Long, heapMb: Long, load1: String, psiCpuUs: Long, psiIoUs: Long,
       cpuMs: Long, taskCpuMs: Long, wallMs: Long, warmups: Int,
-      jitCold: Boolean, semiCold: Boolean, codegenCompiles: Long)
+      jitCold: Boolean, semiCold: Boolean, codegenCompiles: Long,
+      fastest: Option[PerfMeters.Layers])
+
+  /** A query whose first timed run takes longer than this is timed
+    * [[LongRuns]] times instead of SPARK_GRAFT_BENCH_RUNS times.
+    */
+  private val LongQuerySec = 5.0
+  private val LongRuns = 2
+  /** A host-contention retry waits for the 1-minute load below this. */
+  private val RetryLoad1 = 3.0
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,61 +41,30 @@ object Bench {
     // GC/JIT-unlucky run must not masquerade as a cross-round regression
     // (two consecutive bench invocations should agree within ~5%).
     // A failing query must surface as -1, never as a fast-looking timing.
+    // Every run is one window of the run meter: its wall is the run's time
+    // and its layers split that wall.
+    val meter = PerfMeters.attach(spark)
     def time(name: String,
-             fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+             fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[PerfMeters.Layers] =
+      try Some(meter.measure(fn(spark, sfDir).count()))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0
+        None
       }
-    }
-    // Host-contention forensics: two driver-run benches have now produced
-    // scary 2-17x per-query spikes that reproduced at 1x on an idle host
-    // (rounds 7 and 8) — each costing a round of re-measurement to
-    // diagnose. Stamp the artifact with wall-clock + /proc/loadavg at
-    // start/end and keep ALL timed runs per query (not just the min), so
-    // a contended capture is self-diagnosing: spiky max/min ratios within
-    // a query + a high loadavg say "machine", flat runs say "code".
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).mkString("[", ",", "]")
-      catch { case _: Throwable => "[]" }
-    def loadavg1(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").head
-      catch { case _: Throwable => "-1" }
-    // Per-query JVM forensics (round-11 verdict ask #7): several queries
-    // escalated run-over-run ONLY in the driver's round-close capture
-    // (q54 2.09→7.36 s within its own three runs), and settling each one
-    // took a dedicated soak. Record cumulative GC time + heap around each
-    // query so the next escalation argument is one artifact: a query whose
-    // extra seconds match its gc_ms delta is JVM pressure, not plan shape.
-    import scala.jdk.CollectionConverters._
-    def gcMs(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def heapMb(): Long = java.lang.management.ManagementFactory
-      .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
-    // PSI stall totals (µs since boot): the one host signal loadavg
-    // misses — cgroup CPU throttling and I/O stalls show here while
-    // loadavg stays low (the round-11 driver capture escalated q54 3.5x
-    // at loadavg 2). Per-query DELTAS make an inflated wall-clock
-    // attributable: stall delta ~ extra seconds says host, not plan.
-    def psiUs(kind: String): Long =
-      try scala.io.Source.fromFile(s"/proc/pressure/$kind").getLines()
-        .find(_.startsWith("some")).flatMap(_.split("\\s+")
-          .find(_.startsWith("total=")).map(_.stripPrefix("total=").toLong))
-        .getOrElse(-1L)
-      catch { case _: Throwable => -1L }
+    def secs(run: Option[PerfMeters.Layers]): Double = run.fold(-1.0)(_.wallMs / 1e3)
+    // Host-contention forensics: stamp the artifact with wall-clock and
+    // loadavg at start and end, and keep ALL timed runs per query (not just
+    // the min), so a contended capture is self-diagnosing: spiky max/min
+    // ratios within a query and a high loadavg say "machine", flat runs say
+    // "code". Per query, the GC, PSI, process-CPU and task-CPU deltas over
+    // its timed runs say which: extra seconds matching gc_ms are our heap,
+    // matching the PSI stalls are the host, cpu_ms far above task_cpu_ms is
+    // the driver.
+    import PerfMeters.{gcMs, heapMb, loadavg, psiUs}
+    def load1(): String = loadavg().headOption.getOrElse("-1")
     def nowIso(): String = java.time.Instant.now().toString
-    // Per-query CPU time (round-12 verdict ask #3): wall-clock alone can't
-    // distinguish "plan is slow" from "JVM got 1/40th of a CPU" when gc
-    // and PSI are flat. cpu_ms (whole process) and task_cpu_ms (executor
-    // tasks only) over the same 4-run window as gc_ms close that loop:
-    // cpu ~ wall4 x threads says plan; cpu << wall4 says host; task <<
-    // cpu with wall high says driver-side (planning/collect).
-    val taskCpu = PerfMeters.attachTaskCpu(spark)
-    val (tsStart, loadStart) = (nowIso(), loadavg())
+    val (tsStart, loadStart) = (nowIso(), loadavg().mkString("[", ",", "]"))
     // Dev-only subset switch (same contract as Verify's): time just the
     // named queries. Guarded the same way — a typo must fail, not time
     // nothing and read as a healthy bench. Subset runs print their JSON
@@ -102,37 +80,20 @@ object Bench {
     }
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.view.filterKeys(names).toMap)
-    // Long-query economy (round 15, with q245's 64-round trainer in the
-    // suite): a query whose FIRST timed run exceeds this many seconds is
-    // measured once, not three times — its latency is dominated by
-    // inherent sequential rounds, not run-to-run noise, and two more runs
-    // would triple a cost the artifact can already read. Recorded in
-    // "single_run" so min-of-1 is never mistaken for min-of-3.
-    // defensive parse (round-15 advice): a malformed env value must not
-    // abort the run before any artifact is written
-    def envDouble(name: String, default: Double): Double =
-      sys.env.get(name).flatMap { v =>
-        try Some(v.toDouble)
-        catch { case _: NumberFormatException =>
-          System.err.println(s"[bench] $name='$v' is not a number — " +
-            s"using default $default")
-          None
-        }
-      }.getOrElse(default)
-    val longQuerySec = envDouble("SPARK_GRAFT_BENCH_LONG_SEC", 5.0)
-    // Run-count knobs. Normal queries: min-of-3 (the stable statistic
-    // since round 1). Long queries: min-of-2 (round-17 verdict ask #2 —
-    // the r16 single-pass policy let q244/q245 swing 1.6-2.2x between
-    // same-code captures and dominate the headline; one extra pass buys
-    // back stability detection where it matters most, and the spread
-    // column becomes measurable for them). The sf1 full-suite capture
-    // sets both to 1 for economy — single_run in the artifact marks any
-    // query timed fewer than 3 times, so min-of-1/min-of-2 is never
-    // mistaken for min-of-3.
-    def envRuns(name: String, default: Int): Int =
-      math.max(1, envDouble(name, default.toDouble).toInt)
-    val normalRuns = envRuns("SPARK_GRAFT_BENCH_RUNS", 3)
-    val longRuns = envRuns("SPARK_GRAFT_BENCH_LONG_RUNS", 2)
+    // Run count: min-of-3 (the stable statistic since round 1), or the
+    // SPARK_GRAFT_BENCH_RUNS override (the sf1 capture times each query
+    // once). A query whose first timed run exceeds LongQuerySec is timed
+    // LongRuns times: its latency is dominated by inherent sequential
+    // rounds, and a second pass keeps its spread measurable. single_run in
+    // the artifact marks any query timed fewer than 3 times. A malformed
+    // value must not abort the run before any artifact is written.
+    val normalRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").flatMap { v =>
+      try Some(math.max(1, v.toDouble.toInt))
+      catch { case _: NumberFormatException =>
+        System.err.println(s"[bench] SPARK_GRAFT_BENCH_RUNS='$v' is not a number — using 3")
+        None
+      }
+    }.getOrElse(3)
     def measure(name: String,
                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
                 warmupsMax: Int) = {
@@ -161,10 +122,10 @@ object Bench {
       var lastRatioHigh = false
       var lastFalling5 = false
       while (warmups < warmupsMax && continueWarm) {
-        val (p0, t0) = (PerfMeters.procCpuMs(), taskCpu.cpuNs.get())
-        time(name, fn) // untimed warm-up, result discarded
+        val p0 = PerfMeters.procCpuMs()
+        val run = time(name, fn) // untimed warm-up, timing discarded
         val pd = PerfMeters.procCpuMs() - p0
-        val td = (taskCpu.cpuNs.get() - t0) / 1000000L
+        val td = run.fold(0L)(_.taskCpuMs.toLong)
         // td <= 50 ms: too little task work to read the ratio (driver-
         // bound or trivial queries) — treat as warm, one warm-up is right.
         // STABILITY test (round 16 — the r15 artifact flagged 60 queries
@@ -196,23 +157,26 @@ object Bench {
       val stillCold = lastRatioHigh && continueWarm
       val semiCold = lastRatioHigh && !continueWarm && lastFalling5
       val (gc0, cpu0, io0) = (gcMs(), psiUs("cpu"), psiUs("io"))
-      val (pcpu0, tcpu0) = (PerfMeters.procCpuMs(), taskCpu.cpuNs.get())
+      val pcpu0 = PerfMeters.procCpuMs()
       val cg0 = PerfMeters.codegenCompiles()
       val w0 = System.nanoTime()
       val first = time(name, fn)
-      val timed =
-        if (first < 0) Seq(first)
-        else if (first <= longQuerySec)
-          Seq(first) ++ (1 until normalRuns).map(_ => time(name, fn))
-        else Seq(first) ++ (1 until longRuns).map(_ => time(name, fn))
+      val runs =
+        if (first.isEmpty) Seq(first)
+        else if (secs(first) <= LongQuerySec)
+          first +: (1 until normalRuns).map(_ => time(name, fn))
+        else first +: (1 until LongRuns).map(_ => time(name, fn))
       val wallMs = (System.nanoTime() - w0) / 1000000L
       val cpuMs = if (pcpu0 < 0) -1L else PerfMeters.procCpuMs() - pcpu0
-      val taskCpuMs = (taskCpu.cpuNs.get() - tcpu0) / 1000000L
-      val ctx = QueryCtx(gcMs() - gc0, heapMb(), loadavg1(),
+      // each run's share of task_cpu_ms is its layers' task_cpu_ms
+      val taskCpuMs = runs.flatten.map(_.taskCpuMs).sum.toLong
+      val timed = runs.map(secs)
+      val ctx = QueryCtx(gcMs() - gc0, heapMb(), load1(),
         if (cpu0 < 0) -1L else psiUs("cpu") - cpu0,
         if (io0 < 0) -1L else psiUs("io") - io0,
         cpuMs, taskCpuMs, wallMs, warmups, stillCold, semiCold,
-        PerfMeters.codegenCompiles() - cg0)
+        PerfMeters.codegenCompiles() - cg0,
+        if (runs.exists(_.isEmpty)) None else Some(runs.flatten.minBy(_.wallMs)))
       (name, if (timed.exists(_ < 0)) -1.0 else timed.min, timed, ctx)
     }
     // cache isolation is owned by measure() itself (its first statement)
@@ -234,7 +198,6 @@ object Bench {
     // delta is ours — it stays, loudly, in "unstable".
     def spreadOf(timed: Seq[Double]): Double =
       if (timed.exists(_ <= 0) || timed.size < 2) -1.0 else timed.max / timed.min
-    val retryLoad1 = envDouble("SPARK_GRAFT_BENCH_RETRY_LOAD1", 3.0)
     val retriedFirstRuns = scala.collection.mutable.Map[String, Seq[Double]]()
     val retryLoads = scala.collection.mutable.Map[String, Double]()
     val results = firstPass.map { case r @ (name, _, timed, ctx) =>
@@ -243,8 +206,8 @@ object Bench {
       else {
         var waited = 0
         def load1Now(): Double =
-          try loadavg1().toDouble catch { case _: Throwable => 0.0 }
-        while (waited < 60 && load1Now() >= retryLoad1) {
+          try load1().toDouble catch { case _: Throwable => 0.0 }
+        while (waited < 60 && load1Now() >= RetryLoad1) {
           Thread.sleep(5000); waited += 5
         }
         // the load wait TIMED OUT with the host still contended: a retry
@@ -253,15 +216,15 @@ object Bench {
         // numbers (round-15 advice). Keep the first pass, flagged
         // unstable as any >3x spread is.
         val loadAtRetry = load1Now()
-        if (loadAtRetry >= retryLoad1) {
+        if (loadAtRetry >= RetryLoad1) {
           System.err.println(s"[bench] RETRY $name SKIPPED — load1 " +
-            f"$loadAtRetry%.1f still >= $retryLoad1 after ${waited}s; " +
+            f"$loadAtRetry%.1f still >= $RetryLoad1 after ${waited}s; " +
             "keeping first-pass numbers (query stays in 'unstable')")
           r
         } else {
           System.err.println(s"[bench] RETRY $name (spread " +
             f"${spreadOf(timed)}%.1f, gc ${ctx.gcMs} ms — host signature); " +
-            s"waited ${waited}s for load1 < $retryLoad1")
+            s"waited ${waited}s for load1 < $RetryLoad1")
           val retry = measure(name, selected(name), warmupsMax = 1)
           // the load around the retry, in the artifact — sampled AFTER
           // the timed runs too (contention can start mid-retry; the
@@ -287,7 +250,7 @@ object Bench {
         }
       }
     }
-    val (tsEnd, loadEnd) = (nowIso(), loadavg())
+    val (tsEnd, loadEnd) = (nowIso(), loadavg().mkString("[", ",", "]"))
     val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val runsJson = results.map { case (k, _, timed, _) =>
@@ -317,6 +280,12 @@ object Bench {
     // cache (GraftSession.CodegenCacheEntries) is smaller than the
     // working set.
     val codegenJson = byQuery(_.codegenCompiles)
+    // layers: the fastest timed run, the one reported as the query's
+    // value, split by the run meter (PerfMeters.Layers): its driver_ms and
+    // job_span_ms add up to that value. A failed query has none.
+    val layersJson = results.flatMap { case (k, _, _, ctx) =>
+      ctx.fastest.map(l => "\"" + k + "\":" + l.json)
+    }.mkString("{", ",", "}")
     // warm-up forensics: how many warm-ups each query took (1 = was warm
     // immediately) and whether it STILL showed the compiling signature
     // after 3 — the in-run replacement for the post-hoc JIT adjudication.
@@ -391,7 +360,7 @@ object Bench {
       s""""unstable":[${unstable.map("\"" + _ + "\"").mkString(",")}],""" +
         s""""retried":$retriedJson,""" +
         s""""single_run":[${singleRun.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""long_query_sec":$longQuerySec,""" +
+        s""""long_query_sec":$LongQuerySec,""" +
         s""""cpus":$cpus,""" +
         s""""ts_start":"$tsStart","ts_end":"$tsEnd",""" +
         s""""loadavg_start":$loadStart,"loadavg_end":$loadEnd}"""
@@ -406,6 +375,7 @@ object Bench {
         s""""psi_cpu_us":$psiCpuJson,"psi_io_us":$psiIoJson,""" +
         s""""cpu_ms":$cpuJson,"task_cpu_ms":$taskCpuJson,""" +
         s""""wall_ms":$wallJson,"codegen_compiles":$codegenJson,""" +
+        s""""layers":$layersJson,""" +
         s""""warmups":$warmupsJson,"jit_cold":$jitColdJson,""" +
         s""""semi_cold":$semiColdJson,""" +
         s""""runs_first":$runsFirstJson,""" +

@@ -770,14 +770,13 @@ object Dedup {
     * (dropped_rows / dropped_groups / max_group_size, see capGroups) flows
     * to every QueryExecutionListener — GraftSession installs one that logs
     * it — and DedupSpec pins the counts against a planted mega-cluster.
-    * (Shared with Q25Profile so the profiler measures the shipped stages.)
     *
     * Null signatures are dropped up front (defense in depth): hash(null)
     * is a constant, so null-sig docs would all collide in every band and
     * quadratically blow up the candidate stage while contributing no
     * true pairs.
     */
-  private[graft] def lshCandidates(withSig: DataFrame, bands: Int, rows: Int,
+  private def lshCandidates(withSig: DataFrame, bands: Int, rows: Int,
                                    minBandCollisions: Int,
                                    maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val banded0 = bandedBuckets(withSig, bands, rows)
@@ -2306,7 +2305,7 @@ object Dedup {
     // assignment on cid, computing the whole ranking pipeline (centroid
     // cross join → BoundedTopK agg → explode → cap window + a probe-list
     // re-derivation window) once per branch — Catalyst/AQE exchange
-    // reuse provably never unified the branches (tools.ReuseProbe:
+    // reuse provably never unified the branches (OPTIMIZATION_r17.md:
     // CollectMetrics + differing projections + broadcast joins in the
     // subtree break canonical equality). Now the assignment is
     // partitioned ON cid exactly once (an explicit repartition, which the

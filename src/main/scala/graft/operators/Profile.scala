@@ -130,7 +130,7 @@ object Profile {
     * an aggregate list disables whole-stage codegen for the WHOLE
     * HashAggregate, so folding the sketches into the scalar agg drags the
     * counts/min/max into the interpreted row loop — measured 4.1 s vs
-    * 0.9 s for the split shape at sf0.1 (tools/Q76Profile). Splitting
+    * 0.9 s for the split shape at sf0.1 (commit ca5c8cd). Splitting
     * keeps the scalar pass codegen'd and confines the interpreted loop to
     * the sketch-only pass; the two 1-row results run as plain jobs and
     * fuse driver-side ([[eagerOneRow]] — the round-10 driver capture

@@ -401,7 +401,7 @@ object TextIndex {
     * 1-row localCheckpoint job for `best` PLUS a BroadcastExchange that
     * every downstream action re-collected, and the final merge table
     * UNIONed `rounds` checkpointed snapshots; measured at sf0.1 that
-    * fixed overhead dominated the trainer, tools.BpeProfile): now a
+    * fixed overhead dominated the trainer, OPTIMIZATION_r18.md): now a
     * round is exactly ONE Spark job — the pair aggregation feeding the
     * collected argmax — and the merge table itself is a LocalRelation
     * built from the collected rows (zero jobs, schema copied from the

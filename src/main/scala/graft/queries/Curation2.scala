@@ -162,12 +162,12 @@ object Curation2 {
     // scored/clean materialize alongside flat/kept: chunkedPrefix makes
     // TWO passes over its input (boundary sketch + ranking), so an
     // unmaterialized stage would re-run its whole upstream chain per pass
-    // — measured ~4 s of pure recomputation at sf0.1 (tools.Q244Profile).
+    // — measured ~4 s of pure recomputation at sf0.1 (commit 7478c2a).
     // Lazy localCheckpoint instead of persist (round 18): the four stage
     // caches also TRUNCATE the plan, so the chain's eager sub-actions
     // (two boundary sketches, the forest count) and the terminal action
     // stop re-planning the whole upstream pipeline — driver gaps were
-    // 3.3 s of the 8.8 s wall (tools.Q244Jobs; 8.8 → 5.4 s after).
+    // 3.3 s of the 8.8 s wall (commit 0a0c80e; 8.8 → 5.4 s after).
     // Storage freed by the ContextCleaner once the frames drop; the
     // lost-executor recompute caveat is a documented trade (guide §5).
     val scored = TextIndex.docNllFromStats(gop,
@@ -319,7 +319,7 @@ object Curation2 {
     // TRUNCATES the logical plan, so the eager sub-actions and the final
     // action stop re-analyzing/re-optimizing the whole upstream chain —
     // the driver-side planning gaps were ~35 % of this family's wall
-    // (tools.Q244Jobs). Storage is freed by the ContextCleaner when the
+    // (commit 0a0c80e). Storage is freed by the ContextCleaner when the
     // frame becomes unreachable; the lost-executor recompute caveat is
     // irrelevant in this single-process deployment and acceptable for a
     // within-query intermediate (guide §5).

@@ -231,7 +231,7 @@ object Extensions {
     * k-means IVF enters only through the recall_ok boolean the oracle
     * asserts TRUE. Measured recall 0.863 / 0.850 / 1.000 at
     * sf0.001/0.01/0.1 against the 0.8 gate (first-N quantizer:
-    * 0.900/0.900/0.988 — tools.KmeansProbe re-measures both). One left
+    * 0.900/0.900/0.988 — both measured in commit d858bb5). One left
     * join on (qid, neighbor_id) counts exact and found in the same
     * aggregate, q234's comparison shape verbatim.
     */

@@ -101,19 +101,44 @@ object PlanAudit {
     * the next accidental extra shuffle is a red main, not a hand-read
     * plan diff. Regenerate deliberately with --write-budget after a
     * justified plan change.
+    *
+    * A `# scale: <fixture>` line names the fixture directory (`sf0.1`) the
+    * entries were measured on. Under AQE a plan's exchange count follows the
+    * data size, so the entries gate only audits at that scale; a file
+    * without the line gates every scale.
     */
-  def readBudget(path: String): Map[String, (Int, Int)] = {
+  final case class Budget(scale: Option[String], entries: Map[String, (Int, Int)]) {
+    def gates(sfDir: String): Boolean = scale.forall(_ == scaleOf(sfDir))
+
+    /** The budget part of `name`'s audit line over `sfDir`. */
+    def note(name: String, sfDir: String): String = entries.get(name) match {
+      case None => " (no budget entry)"
+      case Some((ex, arrEx)) if gates(sfDir) => s" (budget $ex/$arrEx)"
+      case Some((ex, arrEx)) =>
+        s" (budget@${scale.getOrElse("")} $ex/$arrEx, not gated)"
+    }
+  }
+
+  /** The fixture directory name of `sfDir`, e.g. `sf0.1`. */
+  def scaleOf(sfDir: String): String =
+    java.nio.file.Paths.get(sfDir).getFileName.toString
+
+  private val ScaleLine = "#\\s*scale:\\s*(\\S+)".r
+
+  def readBudget(path: String): Budget = {
     val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) Map.empty
+    if (!java.nio.file.Files.exists(p)) Budget(None, Map.empty)
     else {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(p).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map { l =>
-          val parts = l.split("\\s+")
-          require(parts.length == 3, s"bad budget line: '$l'")
-          parts(0) -> ((parts(1).toInt, parts(2).toInt))
-        }.toMap
+      val lines = java.nio.file.Files.readAllLines(p).asScala.map(_.trim)
+      Budget(
+        lines.collectFirst { case ScaleLine(s) => s },
+        lines.filter(l => l.nonEmpty && !l.startsWith("#"))
+          .map { l =>
+            val parts = l.split("\\s+")
+            require(parts.length == 3, s"bad budget line: '$l'")
+            parts(0) -> ((parts(1).toInt, parts(2).toInt))
+          }.toMap)
     }
   }
 
@@ -155,8 +180,7 @@ object PlanAudit {
     val names = args.tail.filterNot(a => a == "-v" || a == "--write-budget").toSeq
     val spark = graft.GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
-    val budget = if (writeBudget) Map.empty[String, (Int, Int)]
-                 else readBudget(BudgetPath)
+    val budget = if (writeBudget) Budget(None, Map.empty) else readBudget(BudgetPath)
     val measured = scala.collection.mutable.ListBuffer[(String, Int, Int)]()
     var failures = List.empty[String]
     names.foreach { name =>
@@ -165,10 +189,8 @@ object PlanAudit {
       val df = fn(spark, sfDir)
       val a = audit(df)
       measured += ((name, a.exchanges, a.arrayExchanges))
-      val b = budget.get(name)
-      val budgetStr = b.map { case (ex, arrEx) =>
-        s" (budget $ex/$arrEx)"
-      }.getOrElse(if (writeBudget) "" else " (no budget entry)")
+      val b = if (budget.gates(sfDir)) budget.entries.get(name) else None
+      val budgetStr = if (writeBudget) "" else budget.note(name, sfDir)
       println(s"[plan] $name cartesian=${a.cartesian} " +
         s"bnlj=${a.bnljBuildRows.size} " +
         s"bnljBuildRows=[${a.bnljBuildRows.mkString(",")}] " +
@@ -185,11 +207,14 @@ object PlanAudit {
     if (writeBudget) {
       val header = "# per-query ShuffleExchange budget: name exchanges " +
         "arrayExchanges\n# regenerate deliberately with PlanAudit " +
-        "--write-budget after a justified plan change\n"
+        s"--write-budget after a justified plan change\n# scale: ${scaleOf(sfDir)}\n"
       // MERGE with the committed file: a subset regeneration (one new or
       // deliberately-changed query) must not clobber every other query's
-      // entry
-      val merged = readBudget(BudgetPath) ++
+      // entry, nor mix in counts measured at another scale
+      val committed = readBudget(BudgetPath)
+      require(committed.gates(sfDir), s"$BudgetPath holds budgets measured at " +
+        s"${committed.scale.getOrElse("")}; regenerate it at that scale")
+      val merged = committed.entries ++
         measured.map { case (n, e, ae) => n -> ((e, ae)) }.toMap
       val body = merged.toSeq.sortBy(_._1)
         .map { case (n, (e, ae)) => s"$n $e $ae" }.mkString("", "\n", "\n")

@@ -36,48 +36,21 @@ object Soak {
         case o => o.toString.take(20)
       }
     } catch { case _: Throwable => "?" }
-    // bytes of every cached or checkpointed block, memory and disk, after a
-    // GC: the ContextCleaner frees the blocks of unreachable checkpoints on
-    // its own thread, so the sum is read once it has held for a second
-    def storedBytes(): Long = {
-      def sum() = spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-      System.gc()
-      var (last, same, polls) = (sum(), 0, 0)
-      while (same < 10 && polls < 50) {
-        Thread.sleep(100); polls += 1
-        val cur = sum()
-        if (cur == last) same += 1 else { last = cur; same = 0 }
-      }
-      last
-    }
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(1).mkString
-      catch { case _: Throwable => "?" }
-    import scala.jdk.CollectionConverters._
-    def gcMs(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def heapMb(): Long = java.lang.management.ManagementFactory
-      .getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
     // loaded/unloaded driver classes and metaspace in use: every codegen
     // cache entry is a loaded class, so a cache that grows without bound
     // shows here as a rising loaded count and metaspace
     def classMem(): String = {
+      import scala.jdk.CollectionConverters._
       val cl = java.lang.management.ManagementFactory.getClassLoadingMXBean
       val meta = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
         .find(_.getName == "Metaspace").map(_.getUsage.getUsed >> 20).getOrElse(-1L)
       s"classes_loaded=${cl.getLoadedClassCount} classes_unloaded=${cl.getUnloadedClassCount} metaspace_mb=$meta"
     }
-    def psiUs(kind: String): Long =
-      try scala.io.Source.fromFile(s"/proc/pressure/$kind").getLines()
-        .find(_.startsWith("some")).flatMap(_.split("\\s+")
-          .find(_.startsWith("total=")).map(_.stripPrefix("total=").toLong))
-        .getOrElse(-1L)
-      catch { case _: Throwable => -1L }
-
-    // same cpu-vs-wall column Bench carries since round 13 (verdict ask
-    // #3): cpu_ms ~ wall x threads says plan, cpu_ms << wall says host
-    val taskCpu = graft.PerfMeters.attachTaskCpu(spark)
+    import graft.PerfMeters.{gcMs, heapMb, loadavg, psiUs, settledStoredBytes}
+    // every run is one window of the run meter; task_cpu_ms sums the
+    // iteration's four, beside the process CPU: cpu_ms ~ wall x threads
+    // says plan, cpu_ms << wall says host
+    val meter = graft.PerfMeters.attach(spark)
     println(s"[soak] start ${classMem()}")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
@@ -85,23 +58,20 @@ object Soak {
       println(s"== $name ==")
       val mins = (1 to iters).map { i =>
         spark.sharedState.cacheManager.clearCache()
-        val pre = s"cached=${cachedCount()} load=${loadavg()}"
+        val pre = s"cached=${cachedCount()} load=${loadavg().headOption.getOrElse("?")}"
         val (gc0, cpu0) = (gcMs(), psiUs("cpu"))
-        val (pcpu0, tcpu0) = (graft.PerfMeters.procCpuMs(), taskCpu.cpuNs.get())
+        val pcpu0 = graft.PerfMeters.procCpuMs()
         val cg0 = graft.PerfMeters.codegenCompiles()
-        val runs = (1 to 4).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
+        val layers = (1 to 4).map(_ => meter.measure(fn(spark, sfDir).count()))
+        val runs = layers.map(_.wallMs / 1e3)
         val cpuMs = if (pcpu0 < 0) -1L else graft.PerfMeters.procCpuMs() - pcpu0
-        val tCpuMs = (taskCpu.cpuNs.get() - tcpu0) / 1000000L
-        println(f"[$name iter $i%2d] $pre gc_ms=${gcMs() - gc0} heap_mb=${heapMb()} psi_cpu_us=${if (cpu0 < 0) -1L else psiUs("cpu") - cpu0} cpu_ms=$cpuMs task_cpu_ms=$tCpuMs codegen_compiles=${graft.PerfMeters.codegenCompiles() - cg0} stored_bytes=${storedBytes()} ${classMem()}  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
+        val tCpuMs = layers.map(_.taskCpuMs).sum.toLong
+        println(f"[$name iter $i%2d] $pre gc_ms=${gcMs() - gc0} heap_mb=${heapMb()} psi_cpu_us=${if (cpu0 < 0) -1L else psiUs("cpu") - cpu0} cpu_ms=$cpuMs task_cpu_ms=$tCpuMs codegen_compiles=${graft.PerfMeters.codegenCompiles() - cg0} stored_bytes=${settledStoredBytes(spark.sparkContext)} ${classMem()}  runs=${runs.map(r => f"$r%.3f").mkString(",")}")
         runs.tail.min
       }
       println(f"[$name] min-of-3 per iter: ${mins.map(m => f"$m%.3f").mkString(",")}  spread=${mins.max / mins.min}%.2fx")
     }
-    println(s"[soak] final cached=${cachedCount()} stored_bytes=${storedBytes()} ${classMem()}")
+    println(s"[soak] final cached=${cachedCount()} stored_bytes=${settledStoredBytes(spark.sparkContext)} ${classMem()}")
     spark.stop()
   }
 }

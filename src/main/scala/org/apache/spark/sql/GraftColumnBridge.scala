@@ -1,15 +1,19 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into `private[sql]` classic converters: Column <-> Expression,
   * the supported way for libraries to expose custom Catalyst expressions as
-  * `Column`s under Spark 4's Column-node API, and LogicalPlan -> DataFrame.
+  * `Column`s under Spark 4's Column-node API, and LogicalPlan -> DataFrame;
+  * and into the `private[spark]` listener bus, for the run meter.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+  /** Waits until the listener bus has delivered every event posted so far. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -12,20 +12,6 @@ import org.scalatest.time.{Millis, Seconds, Span}
   */
 trait IntermediateLifetime extends SparkSpecBase with Eventually {
 
-  /** Bytes of every cached or checkpointed block, memory and disk. */
-  def storedBytes(): Long =
-    spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-
-  /** [[storedBytes]] after a GC, once the ContextCleaner, which frees the
-    * blocks of unreachable frames on its own thread, stops lowering it.
-    */
-  def settledBytes(): Long = {
-    System.gc()
-    var (prev, cur) = (Long.MaxValue, storedBytes())
-    while (cur < prev) { Thread.sleep(100); prev = cur; cur = storedBytes() }
-    cur
-  }
-
   /** Builds `query` and counts it, `times` times, asserting that the
     * CacheManager holds no entry after each build and each count; then,
     * with every built frame unreachable, waits until the stored blocks are
@@ -33,10 +19,10 @@ trait IntermediateLifetime extends SparkSpecBase with Eventually {
     */
   def leavesNothing(clue: String, times: Int = 1)(query: => DataFrame): Seq[Long] = {
     spark.catalog.clearCache()
-    val base = settledBytes()
+    val base = PerfMeters.settledStoredBytes(spark.sparkContext)
     val counts = countAndDrop(clue, times, query)
     eventually(timeout(Span(30, Seconds)), interval(Span(250, Millis))) {
-      val now = settledBytes()
+      val now = PerfMeters.settledStoredBytes(spark.sparkContext)
       assert(now <= base, s"$clue: $now bytes stored after the frames were dropped, $base before")
     }
     counts

@@ -33,10 +33,6 @@ class PipelineSessionSpec extends SparkSpecBase with Eventually {
     r
   }
 
-  /** Bytes of every cached or checkpointed block, memory and disk. */
-  private def storedBytes(): Long =
-    spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-
   /** Bytes stored for the checkpoint behind one run's merged frame. */
   private def checkpointBytes(r: Pipeline.Result): Long = {
     val ids = r.finalDf.queryExecution.analyzed.collectLeaves().collect {
@@ -72,7 +68,7 @@ class PipelineSessionSpec extends SparkSpecBase with Eventually {
     // dropped Results' checkpoint blocks are freed by the ContextCleaner
     // once the driver collects their RDDs; a GC is asked for so the check
     // does not wait on heap pressure
-    def settled(): Long = { System.gc(); storedBytes() }
+    def settled(): Long = { System.gc(); PerfMeters.storedBytes(spark.sparkContext) }
     val base = settled()
     var held = runAndWrite()
     val perRun = checkpointBytes(held)

@@ -85,6 +85,27 @@ class PlanAuditSpec extends SparkSpecBase {
     PlanAudit.requireBudget("unknown", extra, None)
   }
 
+  test("the exchange budget gates only the scale it was measured at") {
+    val f = java.nio.file.Files.createTempFile("exchange-budget", ".txt")
+    try {
+      java.nio.file.Files.writeString(f, "# a comment\n# scale: sf0.1\nq1 3 0\n")
+      val b = PlanAudit.readBudget(f.toString)
+      assert(b.scale.contains("sf0.1"))
+      assert(b.entries == Map("q1" -> ((3, 0))))
+      // match: the entry gates the audit
+      assert(b.gates("/data/sf0.1") && b.gates("/data/sf0.1/"))
+      assert(b.note("q1", "/data/sf0.1") == " (budget 3/0)")
+      // mismatch: the entry is shown, not gated
+      assert(!b.gates("/data/sf0.01"))
+      assert(b.note("q1", "/data/sf0.01") == " (budget@sf0.1 3/0, not gated)")
+      assert(b.note("q2", "/data/sf0.01") == " (no budget entry)")
+      // a file without the scale line gates every scale
+      java.nio.file.Files.writeString(f, "q1 3 0\n")
+      assert(PlanAudit.readBudget(f.toString).gates("/data/sf0.01"))
+    } finally java.nio.file.Files.delete(f)
+    assert(PlanAudit.readBudget(PlanAudit.BudgetPath).scale.contains("sf0.1"))
+  }
+
   test("cartesian products fail the fence") {
     val a = Seq.tabulate(10)(i => i.toLong).toDF("id")
     val b = Seq.tabulate(10)(i => i.toLong).toDF("id2")
