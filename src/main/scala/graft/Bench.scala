@@ -98,11 +98,11 @@ object Bench {
                 fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
                 warmupsMax: Int) = {
       // cache isolation BETWEEN queries: no query may ride a cache another
-      // query built. No declared query leaves a cache entry of its own:
-      // eager bodies unpersist in a finally, and lazily returned queries
-      // keep their intermediates as checkpoints of their own frames
-      // (operators.Checkpoints), which no later run can read and the
-      // ContextCleaner frees once a run's frame is dropped.
+      // query built. No declared query leaves a cache entry of its own: it
+      // keeps its intermediates as checkpoints of its own frames
+      // (operators.Checkpoints), which no later run can read and which are
+      // freed in a finally or by the ContextCleaner once a run's frame is
+      // dropped.
       spark.sharedState.cacheManager.clearCache()
       // ADAPTIVE warm-up (round-13 verdict ask #3 — end the phantom-
       // regression adjudication loop): one fixed warm-up was measurably

@@ -8,7 +8,7 @@ import graft.sources.{CsvSource, HeaderMode}
   * transforms, merge, build the star schema, and write the six tables.
   *
   * The merged frame (one wide row per suburb) is materialized once, with an
-  * eager `localCheckpoint`: `run` itself runs that one job, and the six
+  * eager `Checkpoints.local`: `run` itself runs that one job, and the six
   * parquet writes are the other actions. The suburb dim, its key join and
   * both facts then read a suburb-sized frame instead of each replaying the
   * CSV scans, the three transforms and both full-outer joins (perfbench
@@ -60,7 +60,8 @@ object Pipeline {
     val electricity = ElectricityTransform(elecRaw)
     val pollution = PollutionTransform(spark, pollRaw)
 
-    val finalDf = MergeDatasets(evSummary, electricity, pollution).localCheckpoint()
+    val finalDf = graft.operators.Checkpoints.local(
+      MergeDatasets(evSummary, electricity, pollution), eager = true)
     val dims = StarSchema.dims(spark, finalDf, evRaw)
     val withKeys = StarSchema.withKeys(finalDf, dims.suburb)
     val evFact = StarSchema.evImpactFact(withKeys)

@@ -8,27 +8,25 @@ import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, LogicalQueryStage,
   QueryStageExec, ResultQueryStageExec}
 
-/** How an operator keeps an intermediate that its query reads more than
-  * once. One rule:
+/** The one way code in this project stores an intermediate that a query
+  * reads more than once. One rule: the intermediate is a local checkpoint
+  * ([[local]]), lazy unless its consumers need its measured size or start
+  * concurrently (then each of them finds it stored). The blocks stay while
+  * any frame that reads them is reachable, and the ContextCleaner frees
+  * them once the driver has collected the last one.
+  * The checkpoint also cuts the plan: a later action reads the blocks
+  * instead of re-planning and recomputing the intermediate. Code that
+  * knows the last read (an eager body that is done with the intermediate
+  * when it returns, a loop round that no later round reads) frees the
+  * blocks itself with [[free]], in a `finally` where an exception may
+  * leave the body early.
   *
-  *  - An operator that returns its result LAZILY keeps each such
-  *    intermediate as a local checkpoint ([[local]]), lazy unless its
-  *    consumers need its measured size. The blocks stay while any frame
-  *    that reads them is reachable, and the ContextCleaner frees them once
-  *    the driver has collected the last one. The checkpoint also cuts the
-  *    plan: a second action on the result reads the blocks instead of
-  *    recomputing the intermediate.
-  *  - An intermediate used up inside an EAGER body, where every action that
-  *    reads it runs before the operator returns, is persisted and
-  *    unpersisted in a `finally`.
-  *  - An iterative loop frees a round's checkpoint with [[free]] as soon as
-  *    no later round and no returned frame reads it.
-  *
-  * analytics.Dashboard's `.cache()` is outside this rule: it spans the
-  * actions of a dashboard pass, as the reference's `st.cache_data` does.
-  * Local checkpoints are not executor-loss tolerant: a lost block fails
-  * the reading job instead of recomputing (Dedup.ckpt has the reliable
-  * variant for long cluster runs).
+  * [[truncate]] is the same for a caller that takes a checkpoint
+  * directory: set, it checkpoints reliably there. analytics.Dashboard's
+  * `.cache()` is the one store outside this object: it spans the actions
+  * of a dashboard pass, as the reference's `st.cache_data` does. Local
+  * checkpoints are not executor-loss tolerant: a lost block fails the
+  * reading job instead of recomputing.
   */
 private[graft] object Checkpoints {
 
@@ -90,6 +88,20 @@ private[graft] object Checkpoints {
           Some(size.getOrElse(lr.stats)), Some(lr.constraints)))
       case _ => ck
     }
+  }
+
+  /** A reliable checkpoint in `checkpointDir` when it is set, for long
+    * cluster runs where an executor loss must replay from files: the
+    * caller owns the directory and cleans it once the result is consumed.
+    * Otherwise [[local]].
+    */
+  def truncate(df: DataFrame, checkpointDir: Option[String],
+               eager: Boolean): DataFrame = checkpointDir match {
+    case None => local(df, eager)
+    case Some(dir) =>
+      // each call writes under a fresh subdirectory of `dir`
+      df.sparkSession.sparkContext.setCheckpointDir(dir)
+      df.checkpoint(eager)
   }
 
   /** `df` hash-partitioned on `keys` into the session's shuffle partition

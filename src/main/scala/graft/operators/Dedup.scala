@@ -523,19 +523,15 @@ object Dedup {
     // candidate join and the over-cap id set). Left as lineage, each
     // consumer would re-derive the signatures — a second full
     // WordGramHashes+MinHashSig pass over the corpus (measured ~70 % on
-    // q25 at sf0.1). Instead band+size ONCE and localCheckpoint the
+    // q25 at sf0.1). Instead band+size ONCE and checkpoint the
     // (doc_id, band, bucket, __gsz) frame: ~40 bytes x bands per doc,
-    // orders of magnitude smaller than the text it derives from; blocks
-    // are freed by the ContextCleaner when the plan is GC'd. Same
-    // executor-loss caveat as the CC loop's localCheckpoint (documented
-    // there, with checkpoint() as the long-cluster-run alternative).
-    // eager = false: the blocks are stored by the first ACTION over the
-    // returned frame, and both consumers share that one copy. Creating the
-    // checkpoint already runs the window's shuffle (Checkpoints.local).
+    // orders of magnitude smaller than the text it derives from. Lazy: the
+    // blocks are stored by the first ACTION over the returned frame, and
+    // both consumers share that one copy.
     val sizedOpt =
       if (!routed) None
-      else Some(groupSized(bandedBuckets(withSig, bands, rows), Seq("band", "bucket"))
-        .localCheckpoint(eager = false))
+      else Some(Checkpoints.local(
+        groupSized(bandedBuckets(withSig, bands, rows), Seq("band", "bucket"))))
     val candidates = sizedOpt match {
       case None => lshCandidates(withSig, bands, rows, minBandCollisions, maxBucketSize)
       case Some(sized) =>
@@ -876,18 +872,17 @@ object Dedup {
                            maxIters: Int = 50,
                            checkpointDir: Option[String] = None,
                            smallGraph: Long = 1L << 22): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     val edges = pairs
       .select(col("doc_id_a").cast("long"), col("doc_id_b").cast("long"))
     // Two alternating passes: by source (each node's out-star whole in one
     // task), then by the emitted local ROOT (each local tree + the chains
     // between its roots whole in one task) — the second pass stitches most
-    // cross-partition chains before any iterative round runs. Eagerly
-    // checkpointed so the stitch resolver's node/label joins read the
+    // cross-partition chains before any iterative round runs. Checkpointed
+    // so the stitch resolver's node/label joins read the
     // materialized forest (~|V| rows) instead of re-running the pair
     // generator; like the direct resolvers, the final checkpoint lives
     // until the labels are consumed.
-    val forest = ckpt(
+    val forest = Checkpoints.truncate(
       contractOnce(contractOnce(edges, "doc_id_a"), "doc_id_b"),
       checkpointDir, eager = false)
     // Small-graph fast path: the contracted forest is |touched nodes|-ish
@@ -1101,35 +1096,22 @@ object Dedup {
           .as("component"))
   }
 
-  /** Truncate lineage between rounds. Default is localCheckpoint — blocks
-    * on the executors, freed explicitly per round, NOT executor-loss
-    * tolerant. With `checkpointDir` set (the long-cluster-run mode) rounds
-    * checkpoint RELIABLY to that directory instead: an executor loss
-    * replays from files, not from a lineage that no longer exists. The
-    * caller owns the directory's lifecycle (checkpoint files outlive the
-    * loop; clean the dir when the labels are consumed).
-    */
-  private def ckpt(df: DataFrame, checkpointDir: Option[String],
-                   eager: Boolean): DataFrame =
-    if (checkpointDir.isDefined) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
-
   private def propagationComponents(pairs: DataFrame, maxIters: Int,
                                     checkpointDir: Option[String]): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     // Checkpoint (not persist) between rounds: an iterative loop's logical
     // plan otherwise GROWS by one round every round, and Catalyst
     // re-analyzes the whole history on each action — measured super-linear
     // round times by round 5 on the fixture. Truncating lineage keeps
-    // per-round planning O(1); see `ckpt` for the local-vs-reliable
-    // tradeoff (DedupSpec proves both modes label identically).
+    // per-round planning O(1); Checkpoints.truncate has the local-vs-
+    // reliable tradeoff (DedupSpec proves both modes label identically).
     val edges = pairs.select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
-    val sym = ckpt(edges.union(edges.select(col("b").as("a"), col("a").as("b"))),
+    val sym = Checkpoints.truncate(
+      edges.union(edges.select(col("b").as("a"), col("a").as("b"))),
       checkpointDir, eager = true)
     // seed labels with the neighbor minimum — the same shuffle a plain
     // distinct() would run (groupBy on a), but it fuses the first
     // propagation round into label construction, saving one loop round
-    var labels = ckpt(sym.groupBy(col("a").as("id"))
+    var labels = Checkpoints.truncate(sym.groupBy(col("a").as("id"))
       .agg(min(least(col("a"), col("b"))).as("component")),
       checkpointDir, eager = true)
     var changed = 1L
@@ -1138,13 +1120,11 @@ object Dedup {
       val viaNeighbor = sym.join(labels, sym("b") === labels("id"))
         .select(sym("a").as("id"), col("component"))
       // LAZY checkpoint: the changed-count below is the round's
-      // materializing action — it computes next's partitions, which the
-      // localCheckpoint mark persists as a side effect, so no separate
-      // eager-materialization job runs per round. (Modest in wall time —
-      // AQE stages dominate — but one fewer full pass over the round's
-      // plan.)
-      val next = ckpt(labels.select("id", "component").union(viaNeighbor)
-        .groupBy("id").agg(min("component").as("component")),
+      // materializing action — it computes next's partitions and stores
+      // them as a side effect, so no separate eager-materialization job
+      // runs per round.
+      val next = Checkpoints.truncate(labels.select("id", "component")
+        .union(viaNeighbor).groupBy("id").agg(min("component").as("component")),
         checkpointDir, eager = false)
       changed = next.join(labels.withColumnRenamed("component", "old"), "id")
         .filter(col("component") =!= col("old")).count()
@@ -1191,11 +1171,10 @@ object Dedup {
     */
   private[graft] def starComponents(pairs: DataFrame, maxIters: Int = 50,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     val nodes = pairs.select(col("doc_id_a").as("id"))
       .union(pairs.select(col("doc_id_b").as("id"))).distinct()
     // canonical directed edge list, larger endpoint -> smaller
-    var edges = ckpt(pairs
+    var edges = Checkpoints.truncate(pairs
       .select(col("doc_id_a").as("x"), col("doc_id_b").as("y"))
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).as("u"), least(col("x"), col("y")).as("v"))
@@ -1226,7 +1205,7 @@ object Dedup {
         .union(nm.select(col("u"), col("m").as("v")))
         .distinct()
       // lazy checkpoint: the checksum is the round's materializing action
-      val next = ckpt(small, checkpointDir, eager = false)
+      val next = Checkpoints.truncate(small, checkpointDir, eager = false)
       val nsig = checksum(next)
       Checkpoints.free(edges)
       edges = next
@@ -1323,7 +1302,7 @@ object Dedup {
     *    SortedIntersectCount merge walk. Map-only, zero shuffle; the eval
     *    side is consumed at build time.
     *  - above it, an eval-scaled constant would ship with every task, so
-    *    the eval hash frame is materialised once (localCheckpoint) and the
+    *    the eval hash frame is materialised once (Checkpoints.local) and the
     *    docs go through [[bloomRoute]].
     */
   def decontaminate(docs: DataFrame, evalTexts: DataFrame, shingleSize: Int,
@@ -1343,7 +1322,7 @@ object Dedup {
             .sortedIntersectCount(col("__sh"), lit(probe)).cast("long"))
           .withColumn("n_grams", size(col("__sh")).cast("long"))
           .drop("__sh")
-      } else bloomRoute(docs, evalSh.localCheckpoint(),
+      } else bloomRoute(docs, Checkpoints.local(evalSh, eager = true),
         hashes(col("text")), sizing.bloomBits)
     counted.withColumn("contaminated",
       col("n_shared") > 0 && rule.holds(col("n_shared"), col("n_grams")))
@@ -2094,8 +2073,7 @@ object Dedup {
     val resT = s"${tableBase}_splits"
     val e = graft.sources.IndexCommits.begin(s, tableBase)
     val vis = graft.sources.IndexCommits.committedFilter(s, tableBase)
-    val b = b0.select(col("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = Checkpoints.local(b0.select(col("doc_id"), col("text")))
     try {
       // (2) index lookup: one row per colliding band, then batch-sized
       // aggregation — the index side is bucketed on the join key
@@ -2136,25 +2114,25 @@ object Dedup {
         .withColumn("comp", coalesce(col("component"), col("doc_id")))
       val finalLbl = labeled
         .groupBy("comp").agg(min("lbl").as("cluster"))
-      val out = labeled.join(finalLbl, Seq("comp"))
+      val out = Checkpoints.local(labeled.join(finalLbl, Seq("comp"))
         .select(col("doc_id"), col("cluster"),
           graft.operators.Sampling.splitAssign(col("cluster"),
-            trainPct, valPct).as("split"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.withColumn("epoch", lit(e))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(resT)
-      // (4) postings carry the RESOLVED labels into the index
-      if (stopAfter >= 2)
-        splitRollingPostings(
-            b.join(out.select(col("doc_id"), col("cluster")), "doc_id"),
-            col("cluster"), shingleSize, numHashes, bands)
-          .withColumn("epoch", lit(e))
-          .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-          .bucketBy(numBuckets, "mbucket").sortBy("mbucket")
-          .saveAsTable(postT)
-      out.unpersist(blocking = false)
-    } finally b.unpersist(blocking = false)
+            trainPct, valPct).as("split")))
+      try {
+        out.withColumn("epoch", lit(e))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .format("parquet").saveAsTable(resT)
+        // (4) postings carry the RESOLVED labels into the index
+        if (stopAfter >= 2)
+          splitRollingPostings(
+              b.join(out.select(col("doc_id"), col("cluster")), "doc_id"),
+              col("cluster"), shingleSize, numHashes, bands)
+            .withColumn("epoch", lit(e))
+            .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
+            .bucketBy(numBuckets, "mbucket").sortBy("mbucket")
+            .saveAsTable(postT)
+      } finally Checkpoints.free(out)
+    } finally Checkpoints.free(b)
     e
   }
 

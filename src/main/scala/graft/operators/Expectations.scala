@@ -101,20 +101,13 @@ object Expectations {
     // stable; the API accepts any DataFrame, so the gate must not trust
     // that. (round-13 advice)
     //
-    // localCheckpoint, NOT persist (round-14 advice): persist is not
-    // executor-loss tolerant — a cached partition lost between the audit
-    // collect and the write would silently RECOMPUTE from the original
-    // source, reopening the divergence the pin closes. localCheckpoint
-    // TRUNCATES lineage, so a lost block fails the write loudly instead
-    // of silently diverging — fail-loud is the right failure mode for an
-    // admission gate (and the ckpt discipline bpeMergeRounds /
-    // propagationComponents already use). The eager materialization is
-    // the same one job persist+collect paid. The checkpoint blocks are
-    // released DETERMINISTICALLY in the finally (unpersisting the
-    // LogicalRDD's checkpointed rdd) — waiting for the ContextCleaner
-    // would let a long foreachBatch stream pile up a block set per
-    // microbatch until a driver GC (round-15 review catch).
-    val pinned = batch.localCheckpoint(eager = true)
+    // A checkpoint TRUNCATES lineage, so a block lost between the audit
+    // collect and the write fails the write loudly instead of silently
+    // recomputing from the source, which would reopen the divergence the
+    // pin closes. The blocks are freed in the finally, not by the
+    // ContextCleaner, so a long foreachBatch stream does not pile up a
+    // block set per micro-batch until a driver GC.
+    val pinned = Checkpoints.local(batch, eager = true)
     try {
       // ONE audit job, collected once (rules-sized): the verdict and the
       // returned report come from the same rows, and the returned frame is

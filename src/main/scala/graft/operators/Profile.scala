@@ -47,7 +47,7 @@ object Profile {
   }
 
   /** [[eagerOneRow]] with ALL frames submitted concurrently — for callers
-    * that have already materialized any shared persisted input (otherwise
+    * that have already stored any shared input (otherwise
     * the first-touch race rebuilds it per job: redundant compute, not
     * wrong, but up to frames.size scans).
     */
@@ -168,12 +168,12 @@ object Profile {
     * `nd_ok` boolean asserting the HLL estimate lies within 1/bandInv of
     * the exact distinct count. Composing [[numericProfile]] with
     * [[numericProfileApprox]] pays an approx scalar pass the band check
-    * discards and serializes the two profiles' job sets; here ONE scalar
-    * pass runs synchronously (materializing any persisted input on a
-    * plain path) and the nCols exact-DISTINCT passes + the single HLL
-    * pass all submit concurrently — nCols+2 scans total, the minimum the
-    * exact-vs-sketch contract admits. Output = numericProfile's columns
-    * plus nd_ok.
+    * discards and serializes the two profiles' job sets; here the scalar
+    * pass, the nCols exact-DISTINCT passes and the single HLL pass all
+    * submit concurrently — nCols+2 scans total, the minimum the
+    * exact-vs-sketch contract admits. A caller that shares one stored
+    * input across them stores it first (q76/q102 pass an eager
+    * checkpoint). Output = numericProfile's columns plus nd_ok.
     */
   def numericProfileBanded(df: DataFrame, cols: Seq[String], bandInv: Int,
                            rsd: Double = 0.02): DataFrame = {
@@ -185,12 +185,6 @@ object Profile {
       max(col(c)).cast("double").as(s"${c}__max"))
     }
     val hllAggs = cols.map(c => approx_count_distinct(col(c), rsd).as(s"${c}__nda"))
-    // If the input is persisted but not yet built, materialize it with one
-    // plain count() first so the concurrent passes below all read the
-    // cache instead of racing to build it (cross-job first-touch is
-    // compute-redundant, not wrong — this just avoids paying the scan
-    // up to nCols+2 times on the first invocation).
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df.count()
     val wide = eagerOneRowConcurrent(
       df.agg(scalarAggs.head, scalarAggs.tail: _*) +:
         (cols.map(c => df.agg(count_distinct(col(c)).as(s"${c}__nd"))) :+

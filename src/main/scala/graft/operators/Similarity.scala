@@ -780,54 +780,54 @@ object Similarity {
                                      sampleMod: Long): Array[(Long, Seq[Double])] = {
     val session = v.sparkSession
     import session.implicits._
-    // persisted across the iters jobs: without it every Lloyd round (and
-    // the init collect) would re-run the source lineage — scan, cast,
-    // norm, hash-sample filter — from scratch
-    val sample = (if (sampleMod <= 1L) v
-                  else v.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0))
-      .select(col("vec_id"), col("e"), col("nrm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init reads from v, not the sample (the first nList vectors might not
-    // survive the hash-sample): the vec_id < nList filter pushes down to
-    // the scan, so this collect is footer-cheap
-    var cents: Array[(Long, Array[Double])] = v.filter(col("vec_id") < nList)
-      .orderBy("vec_id").select("vec_id", "e")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    for (_ <- 1 to iters) {
-      val cdf = broadcast(
-        cents.toSeq.map { case (cid, ce) =>
-          (cid, ce.toSeq, math.sqrt(ce.map(x => x * x).sum))
-        }.toDF("cid", "ce", "cnrm"))
-      val assigned = sample.crossJoin(cdf)
-        .withColumn("sim", dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
-        .groupBy("vec_id")
-        .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("cid"),
-             first(col("e")).as("e"), first(col("nrm")).as("vnrm"))
-      // spherical k-means: average the UNIT vectors (the centroid that
-      // maximizes the summed cosine of its members), not the raw vectors —
-      // raw means of weakly-clustered high-dim data collapse toward the
-      // origin and assign by noise
-      val stats = assigned
-        .select(col("cid"),
-          posexplode(transform(col("e"), x => x / col("vnrm"))).as(Seq("pos", "x")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 16))).as("s"),
-             count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getLong(0))
-      cents = cents.map { case (cid, old) =>
-        cid -> stats.get(cid).fold(old) { rows =>
-          val mean = old.clone()
-          rows.foreach { r =>
-            mean(r.getInt(1)) =
-              (r.getDecimal(2).doubleValue() / r.getLong(3).toDouble)
+    // kept across the iters jobs: without it every Lloyd round would
+    // re-run the source lineage — scan, cast, norm, hash-sample filter —
+    // from scratch
+    val sampled = if (sampleMod <= 1L) v
+                  else v.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
+    val sample = Checkpoints.local(sampled.select(col("vec_id"), col("e"), col("nrm")))
+    try {
+      // init reads from v, not the sample (the first nList vectors might not
+      // survive the hash-sample): the vec_id < nList filter pushes down to
+      // the scan, so this collect is footer-cheap
+      var cents: Array[(Long, Array[Double])] = v.filter(col("vec_id") < nList)
+        .orderBy("vec_id").select("vec_id", "e")
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      for (_ <- 1 to iters) {
+        val cdf = broadcast(
+          cents.toSeq.map { case (cid, ce) =>
+            (cid, ce.toSeq, math.sqrt(ce.map(x => x * x).sum))
+          }.toDF("cid", "ce", "cnrm"))
+        val assigned = sample.crossJoin(cdf)
+          .withColumn("sim", dot(col("e"), col("ce")) / (col("nrm") * col("cnrm")))
+          .groupBy("vec_id")
+          .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("cid"),
+               first(col("e")).as("e"), first(col("nrm")).as("vnrm"))
+        // spherical k-means: average the UNIT vectors (the centroid that
+        // maximizes the summed cosine of its members), not the raw vectors —
+        // raw means of weakly-clustered high-dim data collapse toward the
+        // origin and assign by noise
+        val stats = assigned
+          .select(col("cid"),
+            posexplode(transform(col("e"), x => x / col("vnrm"))).as(Seq("pos", "x")))
+          .groupBy("cid", "pos")
+          .agg(sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 16))).as("s"),
+               count(lit(1)).as("n"))
+          .collect()
+          .groupBy(_.getLong(0))
+        cents = cents.map { case (cid, old) =>
+          cid -> stats.get(cid).fold(old) { rows =>
+            val mean = old.clone()
+            rows.foreach { r =>
+              mean(r.getInt(1)) =
+                (r.getDecimal(2).doubleValue() / r.getLong(3).toDouble)
+            }
+            mean
           }
-          mean
         }
       }
-    }
-    sample.unpersist(blocking = false)
-    cents.map { case (cid, ce) => cid -> ce.toSeq }
+      cents.map { case (cid, ce) => cid -> ce.toSeq }
+    } finally Checkpoints.free(sample)
   }
 
   /** Per-label centroid of an embedding column, order-invariant by

@@ -429,10 +429,6 @@ object TextIndex {
         "checkpoints every round replays ALL prior merges over the base " +
         "scan — total rewrite work QUADRATIC in rounds — set ckptEvery " +
         "(e.g. 4) past 8 rounds")
-    checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
     val S = "\u0001"
     val SS = S + S
     var rep = docs.filter(col(textCol).isNotNull)
@@ -478,7 +474,7 @@ object TextIndex {
         rep = rep.select(org.apache.spark.sql.functions.replace(col("rep"),
           lit(S + tok + SS + nxt + S), lit(S + tok + nxt + S)).as("rep"))
         if (ckptEvery > 0 && (r + 1) % ckptEvery == 0 && r != rounds - 1)
-          rep = ckpt(rep)
+          rep = Checkpoints.truncate(rep, checkpointDir, eager = true)
       }
       r += 1
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Similarity, TextChunks}
+import graft.operators.{Checkpoints, Dedup, Similarity, TextChunks}
 
 /** Round-5 curation additions: line-level boilerplate removal (CCNet
   * pattern), sliding-window document chunking, int8 embedding
@@ -131,8 +131,9 @@ object Curation2 {
     *
     * Scale: every stage keeps its own operator's 100 TB contract; the
     * only additions are map-only projections between stages. flat/kept/
-    * scored/clean materialize once each (multi-consumer stages) as lazy
-    * localCheckpoints — plan-truncating, see the in-body note.
+    * scored/clean materialize once each (multi-consumer stages) as
+    * checkpoints (Checkpoints.local) — plan-truncating, see the in-body
+    * note.
     */
   def q244WebPipeline(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Sampling, StratifiedSelect, TextIndex}
@@ -140,12 +141,12 @@ object Curation2 {
         .filter(col("text").isNotNull))
       .select(col("doc_id"), col("lang"), col("source"),
         graft.functions.Html.htmlExtract(col("text")).as("text"))
-    val flat = TextChunks.stripFrequentLines(extracted, maxDf = 5,
+    val stripped = TextChunks.stripFrequentLines(extracted, maxDf = 5,
         carryCols = Seq("lang", "source"))
       .filter(col("cleaned").isNotNull)
       .select(col("doc_id"), col("lang"), col("source"),
         call_function("replace", col("cleaned"), lit("\n"), lit(" ")).as("text"))
-      .localCheckpoint(false)
+    val flat = Checkpoints.local(stripped)
     // src0 is the held-out benchmark: out of the pool, into the screen
     val evalDocs = flat.filter(col("source") === "src0")
     val pool = flat.filter(col("source") =!= "src0")
@@ -163,16 +164,12 @@ object Curation2 {
     // TWO passes over its input (boundary sketch + ranking), so an
     // unmaterialized stage would re-run its whole upstream chain per pass
     // — measured ~4 s of pure recomputation at sf0.1 (commit 7478c2a).
-    // Lazy localCheckpoint instead of persist (round 18): the four stage
-    // caches also TRUNCATE the plan, so the chain's eager sub-actions
-    // (two boundary sketches, the forest count) and the terminal action
-    // stop re-planning the whole upstream pipeline — driver gaps were
-    // 3.3 s of the 8.8 s wall (commit 0a0c80e; 8.8 → 5.4 s after).
-    // Storage freed by the ContextCleaner once the frames drop; the
-    // lost-executor recompute caveat is a documented trade (guide §5).
-    val scored = TextIndex.docNllFromStats(gop,
-        BigramStatsTables.ensure(s, dir), keyCols = Seq("doc_id", "source"))
-      .localCheckpoint(false)
+    // The four checkpoints also TRUNCATE the plan, so the chain's eager
+    // sub-actions (two boundary sketches, the forest count) and the
+    // terminal action stop re-planning the whole upstream pipeline —
+    // driver gaps were 3.3 s of the 8.8 s wall (commit 0a0c80e).
+    val scored = Checkpoints.local(TextIndex.docNllFromStats(gop,
+        BigramStatsTables.ensure(s, dir), keyCols = Seq("doc_id", "source")))
     val ranked = StratifiedSelect.chunkedPrefix(
       scored.select("doc_id", "source", "avg_nll_u"),
       stratum = "source", primary = "avg_nll_u", desc = false,
@@ -181,8 +178,9 @@ object Curation2 {
     val keptIds = ranked
       .filter(expr("(rn - 1) * 3 DIV n_stratum + 1") <= 2)
       .select("doc_id")
-    val kept = gop.join(keptIds, "doc_id")
-      .localCheckpoint(false)
+    // lazy, though its final stage joins and its consumers join it again:
+    // eager measured no faster at sf0.1 and costs one more job
+    val kept = Checkpoints.local(gop.join(keptIds, "doc_id"))
     // forest pair route (q239's device): CC-identical spanning subgraph,
     // O(docs + rep-pairs) emission — the full-closure oracle gates it
     val labels = Dedup.contractedComponents(
@@ -193,12 +191,11 @@ object Curation2 {
     val contaminated = Dedup.decontaminate(surv.select("doc_id", "text"),
         evalDocs, shingleSize = 3, Dedup.MinSharedPpm(600000L))
       .filter(col("contaminated"))
-    val clean = surv
+    val clean = Checkpoints.local(surv
       .join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
       .withColumn("split", Sampling.splitAssign(col("cluster")))
       .withColumn("n_tokens", TextFunctions.tokenCount(col("text")).cast("long"))
-      .withColumn("cell", concat_ws("|", col("split"), col("lang")))
-      .localCheckpoint(false)
+      .withColumn("cell", concat_ws("|", col("split"), col("lang"))))
     val packed = StratifiedSelect.chunkedPrefix(
         clean.select("doc_id", "lang", "source", "cluster", "split",
           "n_tokens", "cell"),
@@ -314,19 +311,13 @@ object Curation2 {
     // The pool is consumed by THREE downstream branches (the quality
     // scoring that feeds the output, the jaccard pair walk, and the
     // survivor join); without materialization each branch re-pays the
-    // admission band-join. Lazy localCheckpoint (round 18): same
-    // build-once storage as the scoped persist it replaces, but it also
-    // TRUNCATES the logical plan, so the eager sub-actions and the final
-    // action stop re-analyzing/re-optimizing the whole upstream chain —
-    // the driver-side planning gaps were ~35 % of this family's wall
-    // (commit 0a0c80e). Storage is freed by the ContextCleaner when the
-    // frame becomes unreachable; the lost-executor recompute caveat is
-    // irrelevant in this single-process deployment and acceptable for a
-    // within-query intermediate (guide §5).
-    val pool = docs.filter(!isNew)
+    // admission band-join. The checkpoint also TRUNCATES the logical plan,
+    // so the eager sub-actions and the final action stop re-analyzing the
+    // whole upstream chain — the driver-side planning gaps were ~35 % of
+    // this family's wall (commit 0a0c80e).
+    val pool = Checkpoints.local(docs.filter(!isNew)
       .unionByName(docs.filter(isNew).join(admitted, "doc_id"))
-      .select("doc_id", "lang", "source", "text")
-      .localCheckpoint(false)
+      .select("doc_id", "lang", "source", "text"))
     // stage 2: near-dup resolve + one survivor per cluster (q81 machinery)
     val scored = pool.select(col("doc_id"), col("lang"), col("text"),
       TextFunctions.qualityScore(col("text")).as("quality"))

@@ -174,22 +174,22 @@ object Graphs {
       val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")) ||
           !fs.exists(new org.apache.hadoop.fs.Path(items, "_SUCCESS"))) {
-        val fenced = Tables.lineitem(s, dir)
+        val fenced = graft.operators.Checkpoints.local(Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("o"), col("l_partkey").cast("long").as("p"))
           .distinct()
           .withColumn("bsz", count(lit(1)).over(Window.partitionBy("o")))
           .filter(col("bsz") <= 32)
-          .select(col("o"), col("p"))
-          .persist()
-        fenced.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(items.toString)
-        fenced.as("a")
-          .join(fenced.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("x"), col("b.p").as("y"))
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path.toString)
-        fenced.unpersist()
+          .select(col("o"), col("p")))
+        try {
+          fenced.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(items.toString)
+          fenced.as("a")
+            .join(fenced.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+            .groupBy(col("a.p").as("x"), col("b.p").as("y"))
+            .agg(count(lit(1)).as("support"))
+            .filter(col("support") >= 2)
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path.toString)
+        } finally graft.operators.Checkpoints.free(fenced)
       }
       path.toString
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Profile, StratifiedSelect}
+import graft.operators.{Checkpoints, Dedup, Profile, StratifiedSelect}
 
 /** Round-5 scale-hardening twins: each query here re-runs an ALREADY
   * DECLARED query's semantics through its documented 100 TB escape hatch,
@@ -132,15 +132,14 @@ object Scaled {
   def q76ProfileApprox(s: SparkSession, dir: String): DataFrame = {
     val cols = Seq("o_totalprice", "o_custkey", "o_orderkey")
     // the exact profile + the approx profile's own passes consume this
-    // projection several times — share one in-memory copy. Profile
-    // construction is eager since round 11 (every pass runs at
-    // construction, on plain job paths), so the cache materializes outside
-    // any broadcast build and can be released synchronously right here —
-    // no scoped listener, nothing outlives the call.
-    val proj = Tables.orders(s, dir).select(cols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // projection several times — share one stored copy, stored before the
+    // profile's concurrent passes start. Profile construction is eager
+    // (every pass runs before it returns), so the copy is freed right here
+    // and nothing outlives the call.
+    val proj = Checkpoints.local(Tables.orders(s, dir).select(cols.map(col): _*),
+      eager = true)
     try Profile.numericProfileBanded(proj, cols, bandInv = 20)
-    finally proj.unpersist(blocking = false)
+    finally Checkpoints.free(proj)
   }
 
   /** q58's dedup resolution through the large-star/small-star path
@@ -628,22 +627,19 @@ object Scaled {
     */
   def q102ProfileBanded(s: SparkSession, dir: String): DataFrame = {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-    // ONE projected scan persisted across all 7 aggregate passes (shared
+    // ONE projected scan kept across all 7 aggregate passes (shared
     // scalar pass + 4 exact DISTINCTs + the approx twin's 2): without it
     // the query re-reads lineitem per pass, and the repeated IO dominates
     // under contention (measured ×17 on a loaded host). The projection is
-    // 4 doubles/row, so the cache is a small fraction of the source table
+    // 4 doubles/row, so the copy is a small fraction of the source table
     // at any sf; at 100 TB this is exactly the "project then profile"
-    // shape the Profile scaladoc prescribes.
-    val proj = Tables.lineitem(s, dir).select(cols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Profile construction is eager (round 11): every pass runs here on a
-    // plain job path — scalar pass synchronously (materializing the
-    // cache), the distinct + HLL passes concurrently — so the cache is
-    // fully consumed by the time the profile returns as a local frame.
-    // Release it synchronously instead of via the scoped listener.
+    // shape the Profile scaladoc prescribes. The copy is stored before the
+    // profile's concurrent passes start; profile construction is eager, so
+    // every pass is done when it returns and the copy is freed right here.
+    val proj = Checkpoints.local(Tables.lineitem(s, dir).select(cols.map(col): _*),
+      eager = true)
     try Profile.numericProfileBanded(proj, cols, bandInv = 50)
-    finally proj.unpersist(blocking = false)
+    finally Checkpoints.free(proj)
   }
 
   /** q105: the q100-q102 banded trick applied to the LAST rows-only query

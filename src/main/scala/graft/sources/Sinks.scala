@@ -260,34 +260,11 @@ object Sinks {
     spark.sql(s"ALTER TABLE $tmp RENAME TO $tableName")
   }
 
-  /** CSV with an explicit row-index column where pandas-index parity
-    * matters (the reference writes `to_csv` with the default index,
-    * main.py:214,221,228,236,345-346).
-    *
-    * The index is assigned distributed: RDD zipWithIndex numbers rows in
-    * partition-then-offset order (identical to what a global window over
-    * monotonically_increasing_id would produce) — no single-task funnel of
-    * the whole frame. zipWithIndex needs a partition-count job BEFORE the
-    * write job, and that first job would re-evaluate the frame's full
-    * lineage (scans, joins, aggregations) a second time, so the frame is
-    * persisted across the two jobs and released after the write.
+  /** CSV with a header line, for golden-file diffing against the
+    * reference's `to_csv` outputs (main.py:214,221,228,236,345-346).
     */
-  def csv(df: DataFrame, path: String, withRowIdx: Boolean = false): Unit = {
-    def writeOut(d: DataFrame): Unit =
-      d.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-    if (!withRowIdx) writeOut(df)
-    else {
-      val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val schema = df.schema.add("row_idx", org.apache.spark.sql.types.LongType,
-          nullable = false)
-        val rdd = cached.rdd.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-        }
-        writeOut(df.sparkSession.createDataFrame(rdd, schema))
-      } finally cached.unpersist(blocking = false)
-    }
-  }
+  def csv(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
   /** Newline-delimited JSON sink — the interchange layout for handing a
     * curated slice to a non-Spark consumer (tokenizer workers, labeling

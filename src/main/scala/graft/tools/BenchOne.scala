@@ -7,6 +7,13 @@ package graft.tools
   * generated classes compiled, the driver time outside any Spark job, the
   * job span and the job count.
   *
+  * Its walls compare only with other BenchOne walls, not with the full
+  * Bench: it runs the named queries alone in a fresh JVM, without the
+  * sweep that comes before them in Bench (at sf0.1 on 4 cores q244 read
+  * 5.0–5.8 s here against 3.09 s in Bench). Compare a change with its
+  * parent in alternating runs, each side built from a scratch copy of the
+  * same kind (`git archive` into a directory of its own).
+  *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.BenchOne q99_curation_chain [more...]
   */
 object BenchOne {

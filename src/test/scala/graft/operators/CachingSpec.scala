@@ -25,6 +25,9 @@ class CachingSpec extends IntermediateLifetime {
     assert(leavesNothing("q102") {
       graft.queries.Scaled.q102ProfileBanded(spark, Sf0001)
     } == Seq(4L))
+    assert(leavesNothing("q76") {
+      graft.queries.Scaled.q76ProfileApprox(spark, Sf0001)
+    } == Seq(3L))
     val emb = graft.Tables.embeddings(spark, Sf0001)
     assert(leavesNothing("mutualTop1") {
       Similarity.mutualTop1(emb.filter(col("label") === 0), emb.filter(col("label") === 1))
@@ -42,6 +45,39 @@ class CachingSpec extends IntermediateLifetime {
     assert(leavesNothing("cells", times = 2) {
       Dedup.embeddingNearDupsCells(emb, threshold = 0.3, maxBlockSize = 1 << 20)
     }.forall(_ > 0))
+    // the curation chains' stage checkpoints, the component loops under
+    // them, and the BPE trainer's representation checkpoints (q242; q228's
+    // three rounds take none)
+    for ((name, q) <- Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)](
+        "q244" -> graft.queries.Curation2.q244WebPipeline,
+        "q99" -> graft.queries.Curation2.q99CurationChain,
+        "q25" -> graft.queries.Extensions.q25MinhashLsh,
+        "q228" -> graft.queries.TextStats.q228BpeMerges,
+        "q242" -> graft.queries.TextStats.q242BpeCkpt))
+      assert(leavesNothing(name)(q(spark, Sf0001)).forall(_ > 0), name)
+    // minhashLsh's routed banding checkpoint
+    val docs = graft.Tables.documents(spark, Sf0001).filter(col("text").isNotNull)
+    assert(leavesNothing("routed lsh") {
+      Dedup.minhashLsh(docs, shingleSize = 3, numHashes = 32, bands = 8,
+        threshold = 0.5, maxBucketSize = 50, routeOverCapExact = true)
+    }.forall(_ > 0))
+  }
+
+  test("nothing in src/main stores an intermediate outside Checkpoints") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"no source tree at ${root.getAbsolutePath}")
+    val allowed = Set("operators/Checkpoints.scala", "analytics/Dashboard.scala")
+    val store = """\.persist\(|\.cache\(\)|\.localCheckpoint\(|\.checkpoint\(|setCheckpointDir""".r
+    import scala.jdk.CollectionConverters._
+    val hits = for {
+      f <- java.nio.file.Files.walk(root.toPath).iterator().asScala.toSeq
+      rel = root.toPath.relativize(f).toString.replace('\\', '/')
+      if rel.endsWith(".scala") && !allowed(rel) && !rel.startsWith("tools/")
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if store.findFirstIn(line).isDefined
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("a lazy checkpoint keeps its input's hash partitioning") {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpecBase
+import graft.{IntermediateLifetime, PerfMeters}
 import graft.queries.Signals
 import graft.sources.IndexCommits
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * hooks ARE the simulated kills: they run the production write sequence
   * and stop before the IndexCommits commit.
   */
-class IndexCrashSpec extends SparkSpecBase {
+class IndexCrashSpec extends IntermediateLifetime {
 
   private def docs = graft.Tables.documents(spark, Sf0001)
     .filter(col("text").isNotNull)
@@ -254,5 +254,32 @@ class IndexCrashSpec extends SparkSpecBase {
         "post-crash retry must equal the uninterrupted two-batch run")
     } finally dropAll(s"${base}_post", s"${base}_splits",
       s"${ref}_post", s"${ref}_splits")
+  }
+
+  test("a split batch whose append fails frees what it stored") {
+    val base = "graft_crash_rollsplit_bad"
+    dropAll(s"${base}_post", s"${base}_splits")
+    try {
+      val corpus = docs.filter(col("doc_id") % 3 === 0)
+      val labels = corpus.select(col("doc_id"), col("doc_id").as("component"))
+      val news = docs.filter(col("doc_id") % 3 =!= 0).select("doc_id", "text")
+      Dedup.splitRollingMinhash(corpus, labels, Seq(news.filter(col("doc_id") % 3 === 1)),
+        base, threshold = 0.8)
+      // the split table now has a schema the batch's rows cannot append to
+      spark.sql(s"DROP TABLE ${base}_splits")
+      spark.sql(s"CREATE TABLE ${base}_splits (x STRING) USING parquet")
+      spark.catalog.clearCache()
+      val stored = PerfMeters.settledStoredBytes(spark.sparkContext)
+      intercept[org.apache.spark.sql.AnalysisException] {
+        Dedup.splitRollingStep(news.filter(col("doc_id") % 3 === 2), base,
+          threshold = 0.8, minBandCollisions = 1, shingleSize = 3, numHashes = 32,
+          bands = 8, numBuckets = 32, trainPct = 90, valPct = 5, stopAfter = 2)
+      }
+      assert(spark.sharedState.cacheManager.isEmpty, "a cache entry after the failed append")
+      eventually(timeout(org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        val now = PerfMeters.settledStoredBytes(spark.sparkContext)
+        assert(now <= stored, s"$now bytes stored after the failed append, $stored before")
+      }
+    } finally dropAll(s"${base}_post", s"${base}_splits")
   }
 }
